@@ -3,7 +3,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // 32 cores on the reference host; never more threads than the machine has
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      math.min(32, Runtime.getRuntime.availableProcessors).toString)
     // shuffle.partitions=8 with AQE ON (r14 floor work, BenchGrid
     // full-catalog same-JVM A/B over 4 postures × 2 reps): sp sets the
     // INITIAL reduce partition count; AQE still coalesces tiny stages and
@@ -30,10 +32,16 @@ object Bench {
     // hot-data posture (at 100 TB you cache the dims and the working set;
     // here the whole sf fits trivially in memory). Correctness runs
     // (Verify) stay uncached.
-    Tables.names.foreach { n =>
+    // untimed phases: wall seconds of each, recorded in the full JSON
+    // ("phases") so the artifact accounts for the whole run, not just the
+    // timed loop
+    def secondsOf(body: => Unit): Double = {
+      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
+    }
+    val tablesS = secondsOf(Tables.names.foreach { n =>
       val df = Tables.load(spark, sfDir, n)
       df.cache(); df.count()
-    }
+    })
     // Same posture for the write-once layouts: the bucketed tables, the
     // z-order sink, and the streaming source dir are input PREPARATION
     // (a warehouse lays them down at load time); without this warm a fresh
@@ -46,7 +54,7 @@ object Bench {
     // memo hit under the warm posture, and the bench JSON records which
     // posture ran via "shared_warm" so the two are never conflated).
     val sharedWarm = sys.env.getOrElse("SPARK_GRAFT_BENCH_SHAREDWARM", "1") != "0"
-    try {
+    val stagingS = secondsOf(try {
       graft.queries.ScanQueries.warmStaging(spark, sfDir)
       graft.queries.StreamQueries.warmStaging(spark, sfDir)
       graft.queries.JoinQueries.warmStaging(spark, sfDir)
@@ -61,7 +69,7 @@ object Bench {
       }
     } catch { case e: Throwable =>
       System.err.println(s"[bench] staging warm failed (continuing): $e")
-    }
+    })
     // SPARK_GRAFT_BENCH_ONLY=key1,key2 restricts the run — local iteration
     // aid for profiling individual operators; unset (the driver's mode) runs
     // the full catalog
@@ -89,8 +97,7 @@ object Bench {
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
       .map(keys => SparkEntry.queries.view.filterKeys(keys).toMap)
       .getOrElse(selected)
-    if (warmPass) {
-      val w0 = System.nanoTime()
+    val warmPassS = if (!warmPass) 0.0 else secondsOf {
       warmSelected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
         try fn(spark, warmSfDir).queryExecution.toRdd.count() // same codegen classes as the timed exec action
         catch { case e: Throwable =>
@@ -101,9 +108,9 @@ object Bench {
         }
       }
       System.gc()
-      System.err.println(f"[bench] warm pass (${warmSelected.size} entries @ $warmSfDir): " +
-        f"${(System.nanoTime() - w0) / 1e9}%.1f s untimed")
     }
+    if (warmPass) System.err.println(f"[bench] warm pass (${warmSelected.size} " +
+      f"entries @ $warmSfDir): $warmPassS%.1f s untimed")
     // Second, TARGETED JIT warm at the timed sfDir (r20 optimization round,
     // drift-mode root cause): entries whose hot path is a deep SHARED-
     // LIBRARY call tree (JDK XPath DOM battery, from_json parser) get only
@@ -126,8 +133,7 @@ object Bench {
         "src_xml_extract,src_json_array")
       .split(',').map(_.trim).filter(_.nonEmpty).toSeq
       .filter(selected.contains)
-    if (warmHot.nonEmpty) {
-      val w0 = System.nanoTime()
+    val warmHotS = if (warmHot.isEmpty) 0.0 else secondsOf {
       warmHot.foreach { name =>
         try selected(name)(spark, sfDir).queryExecution.toRdd.count()
         catch { case e: Throwable =>
@@ -138,9 +144,9 @@ object Bench {
         }
       }
       System.gc()
-      System.err.println(f"[bench] warm-hot pass (${warmHot.size} entries @ $sfDir): " +
-        f"${(System.nanoTime() - w0) / 1e9}%.1f s untimed")
     }
+    if (warmHot.nonEmpty) System.err.println(f"[bench] warm-hot pass " +
+      f"(${warmHot.size} entries @ $sfDir): $warmHotS%.1f s untimed")
     // fixed (sorted) execution order: hash-map order varied run to run,
     // which moved JVM warm-up and heap-pressure effects onto DIFFERENT
     // queries each round and made per-query numbers incomparable
@@ -243,14 +249,15 @@ object Bench {
     // 106 s / 135 s for near-identical catalogs across boots (host steal +
     // per-boot CPU variance). A fixed arithmetic loop timed here lets any
     // two bench JSONs be normalized (total / calib) before comparison.
-    val calib = {
-      val t0 = System.nanoTime()
+    val calib = secondsOf {
       var acc = 0L; var i = 0L
       while (i < 200000000L) { acc += i * i; i += 1 }
       if (acc == 42L) println("") // defeat dead-code elimination
-      (System.nanoTime() - t0) / 1e9
     }
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","calib_sec":$calib,"shared_warm":$sharedWarm,"warm_hot":"${warmHot.mkString(",")}","action":"${if (execAction) "exec" else "count"}","gc_sec":$gcMap,"cpu_sec":$cpuMap}"""
+    val phases = Seq("tables_s" -> tablesS, "staging_s" -> stagingS,
+      "warm_pass_s" -> warmPassS, "warm_hot_s" -> warmHotS, "calib_s" -> calib)
+      .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","calib_sec":$calib,"shared_warm":$sharedWarm,"warm_hot":"${warmHot.mkString(",")}","action":"${if (execAction) "exec" else "count"}","gc_sec":$gcMap,"cpu_sec":$cpuMap,"phases":$phases}"""
     // The JSON travels three redundant ways (VERDICT.md r1 #5: the driver
     // parsed nothing from round 1's single println buried in sbt noise):
     // (1) a file the driver can read directly, (2) an early stdout line,

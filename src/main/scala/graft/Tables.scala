@@ -77,10 +77,42 @@ object Tables {
     else base
   }
 
+  /** Parquet schemas inferred once per table state and handed to every
+    * later read, across sessions. [[loadCache]] is per session, so each new
+    * session's `spark.read.parquet` would otherwise run a footer-inference
+    * Spark job per table; this pays off where many sessions share one JVM.
+    * The key is the path plus the length and modification time of the
+    * path itself (one status call, no listing: the sf directories are
+    * immutable, and a table rewritten through Spark replaces its files,
+    * which moves the directory's mtime), and the nanosAsLong posture the
+    * caller read under (it decides whether a NANOS column infers as
+    * LongType). A read with a given schema plans the same relation, so it
+    * still hits the shared table cache. */
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long, String), StructType]()
+
+  private def readParquet(spark: SparkSession, path: String, posture: String = "")
+      : DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) return spark.read.parquet(path) // Spark's own missing-path error
+    val st = fs.getFileStatus(p)
+    val key = (path, st.getLen, st.getModificationTime, posture)
+    Option(schemaCache.get(key)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => // infer once, through the read the caller gets
+        val df = spark.read.parquet(path)
+        if (schemaCache.size > 512) schemaCache.clear() // same bound as loadCache
+        schemaCache.put(key, df.schema)
+        df
+    }
+  }
+
   private def doRead(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
+      val raw = readParquet(spark, s"$sfDir/events.parquet",
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"))
       raw.schema("ts").dataType match {
         case LongType => // TIMESTAMP(NANOS) read as raw nanos: truncate to µs
           raw.withColumn("ts", org.apache.spark.sql.functions.expr(
@@ -93,7 +125,7 @@ object Tables {
               "nanosAsLong) or TIMESTAMP_NTZ. Regenerate the fixture with " +
               "isAdjustedToUTC=false (naive µs) — see Tables.scala scaladoc.")
       }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+    } else readParquet(spark, s"$sfDir/$name.parquet")
 
   def region(spark: SparkSession, sfDir: String): DataFrame     = load(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame     = load(spark, sfDir, "nation")

@@ -213,17 +213,17 @@ object TextQueries {
 
   /** Adaptive bitmask encoding of per-doc distinct token sets (r19,
     * VERDICT r18 #1 follow-through): when the corpus' global vocabulary
-    * fits 64 bits (counted from the data — one scalar stats job, the
-    * statistics-driven plan pick of a CBO; the graded corpus holds a
-    * 31-token vocabulary at every SF), return
-    * `(doc_id, lang, n_chars, mask, n)` where `mask` is an EXACT bitmask
-    * over a data-derived token→bit dictionary (row_number over the sorted
-    * distinct tokens — a bijection, not a hash; which bit a token gets is
-    * irrelevant to any set algebra) and `n = bit_count(mask) =` the
-    * distinct-token count. Consumers compute |A∩B| as
-    * `bit_count(mask_a & mask_b)` — one instruction where the general
-    * path sorted-merges two string arrays — with bit-identical integer
-    * results. Returns None above 64 tokens or when
+    * fits 64 bits (read from the data — one bounded job that collects at
+    * most 65 distinct tokens per partition, the statistics-driven plan
+    * pick of a CBO; the graded corpus holds a 31-token vocabulary at every
+    * SF), return `(doc_id, lang, n_chars, mask, n)` where `mask` is an
+    * EXACT bitmask over a data-derived token→bit dictionary (each token's
+    * rank in sorted order, joined as a local relation — a bijection, not a
+    * hash; which bit a token gets is irrelevant to any set algebra) and
+    * `n = bit_count(mask) =` the distinct-token count. Consumers compute
+    * |A∩B| as `bit_count(mask_a & mask_b)` — one instruction where the
+    * general path sorted-merges two string arrays — with bit-identical
+    * integer results. Returns None above 64 tokens or when
     * `graft.text.tokenBitmask=off`; callers then run their sorted-array
     * general path (BitmaskPathSpec pins the two paths output-equal). */
   /** Per-(session, sfDir) memo of the two r19 encode frames (ADVICE r19):
@@ -273,10 +273,14 @@ object TextQueries {
     val t = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("n_chars"),
         array_distinct(split(col("text"), " ")).as("toks"))
-    val vocab = t.select(explode(col("toks")).as("t")).distinct()
-    if (vocab.count() > 64) return None // bounded driver action: one scalar
-    val dict = vocab.select(col("t"),
-      (row_number().over(Window.orderBy(col("t"))) - 1).as("bid"))
+    // one job reads gate and dictionary: each partition stops at its 65th
+    // distinct token, so the union is the whole vocabulary iff it holds ≤64
+    // (a global distinct adds a shuffle job); bits follow the sorted tokens
+    import spark.implicits._
+    val vocab = t.select(explode(col("toks"))).as[String]
+      .mapPartitions(_.distinct.take(65)).collect().distinct.sorted
+    if (vocab.length > 64) return None
+    val dict = vocab.toSeq.zipWithIndex.toDF("t", "bid")
     // cached: every consumer reads the frame at least twice (both sides of
     // a pair join, or the rep groupBy plus the doc join-back) — uncached,
     // the explode+dictionary-join+groupBy encoding runs once per reference.
@@ -2152,11 +2156,18 @@ object TextQueries {
     * Scale design: lang-only blocking is deliberately the WORST case among
     * the blocked entries (containment cannot length-band symmetrically:
     * the contained doc is shorter by definition — the one-sided 0.95
-    * prune above is all the predicate implies). The reps side is salted
-    * ×8 so the few big lang blocks spread across the cluster; at 100 TB
-    * candidates come from `dedup_minhash_lsh` banding on the SHORTER
-    * side's shingles and this becomes a per-candidate verify, same as the
-    * jaccard twins. */
+    * prune above is all the predicate implies). The plan that runs
+    * ([[containmentCounts]], both encodings), while the documents fit
+    * Spark's broadcast threshold: the rep groupBy shuffles on (lang, key);
+    * the probe side is hash-repartitioned on its key to
+    * `spark.sql.shuffle.partitions` (REPARTITION_BY_NUM, which AQE does
+    * not coalesce) and streams against the broadcast reps on `lang`, so
+    * the pair verify runs on every core and its roll-up needs no further
+    * exchange; the roll-up is broadcast into the doc-level left join, so
+    * the final sort's range-sample job re-reads only the docs. Above the
+    * threshold Spark picks both joins by size. At 100 TB candidates come
+    * from `dedup_minhash_lsh` banding on the SHORTER side's shingles and
+    * this becomes a per-candidate verify, same as the jaccard twins. */
   private val containment = CatalogEntry.dialect(
     "dedup_containment",
     duckdb = """WITH t AS (
@@ -2194,80 +2205,69 @@ object TextQueries {
               |      OR size(b.toks) * CAST(1.0 AS DOUBLE) / size(a.toks) >= 0.95)
               |GROUP BY a.doc_id ORDER BY a.doc_id""".stripMargin) { (spark, sfDir) =>
     // bitmask fast path (see [[tokenMasks]]): reps collapse to
-    // (lang, 64-bit mask, clone count), the pair join shuffles two longs
+    // (lang, 64-bit mask, clone count), the pair join carries two longs
     // per row, and both CASE predicates read bit_count(mask_a & mask_b) —
     // the same integers the array spelling computes
     tokenMasks(spark, sfDir).map { masks =>
-      val salts = 8
-      val reps = masks.groupBy(col("lang"), col("mask")).agg(count(lit(1)).as("m"))
-        .withColumn("n", expr("bit_count(mask)"))
-      val ra = reps.select(col("lang"), col("mask").as("mask_a"),
-          col("m").as("m_a"), col("n").as("n_a"))
-        .withColumn("salt", pmod(col("mask_a"), lit(salts)))
-      val rb = reps.select(col("lang"), col("mask").as("mask_b"),
-          col("m").as("m_b"), col("n").as("n_b"))
-        .withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
-      val repCounts = ra.join(rb, Seq("lang", "salt"))
-        .where(col("n_b") * lit(1.0) / col("n_a") >= 0.95) // implied length prune
-        .withColumn("inter", expr("bit_count(mask_a & mask_b)"))
-        .withColumn("w", when(col("mask_a") === col("mask_b"), col("m_b") - 1)
-          .otherwise(col("m_b")))
-        .groupBy(col("lang"), col("mask_a"))
-        .agg(
-          sum(when(col("inter") === col("n_a"), col("w")).otherwise(0L)).as("n_supersets"),
-          sum(when(col("inter") * lit(1.0) / col("n_a") >= 0.95, col("w")).otherwise(0L))
-            .as("n_containers"))
-        .withColumnRenamed("mask_a", "mask")
-      // LEFT join + coalesce: a null-text doc has a NULL mask (no rep row
-      // survives the prune), and the pre-r19 contract emits (0,0) for it;
-      // a null-LANG doc never joins in the oracle and stays dropped
-      masks.where(col("lang").isNotNull)
-        .join(repCounts, Seq("lang", "mask"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_supersets"), lit(0L)).as("n_supersets"),
-          coalesce(col("n_containers"), lit(0L)).as("n_containers"))
-        .orderBy(col("doc_id"))
+      containmentCounts(spark, sfDir, masks, "mask", k => expr(s"bit_count($k)"),
+        (a, b) => expr(s"bit_count($a & $b)"))
     }.getOrElse(containmentGeneral(spark, sfDir))
   }
 
-  /** General (>64-vocab) path of [[containment]] — identical count
-    * algebra over DISTINCT (lang, sorted-token-array) reps with the
-    * native sorted-merge intersect; BitmaskPathSpec pins it output-equal
-    * to the mask path. */
+  /** General (>64-vocab) path of [[containment]] — the same count algebra
+    * over DISTINCT (lang, sorted-token-array) reps with the native
+    * sorted-merge intersect; BitmaskPathSpec pins it output-equal to the
+    * mask path. */
   private[graft] def containmentGeneral(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): org.apache.spark.sql.DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    val salts = 8
     val t = Tables.documents(spark, sfDir).select(col("doc_id"), col("lang"),
       sort_array(array_distinct(split(col("text"), " "))).as("toks"))
-    val reps = t.groupBy(col("lang"), col("toks")).agg(count(lit(1)).as("m"))
-      .withColumn("n", size(col("toks")))
-    val ra = reps.select(col("lang"), col("toks").as("toks_a"),
-        col("m").as("m_a"), col("n").as("n_a"))
-      .withColumn("salt", pmod(xxhash64(col("toks_a")), lit(salts)))
-    val rb = reps.select(col("lang"), col("toks").as("toks_b"),
-        col("m").as("m_b"), col("n").as("n_b"))
-      .withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
-    val repCounts = ra.join(rb, Seq("lang", "salt"))
+    containmentCounts(spark, sfDir, t, "toks", k => expr(s"size($k)"),
+      (a, b) => expr(s"sorted_intersect_size($a, $b)"))
+  }
+
+  /** The rep-pair count algebra of [[containment]], shared by both paths.
+    * `docs` carries `doc_id`, `lang` and the token-set column `key` (a
+    * mask or a sorted array); `card` and `inter` spell |A| and |A∩B| on
+    * that encoding. Reps group on the raw (lang, key) — exact, so key
+    * equality identifies the self-rep pair, which weighs m−1 (the doc's
+    * own clones). */
+  private def containmentCounts(spark: org.apache.spark.sql.SparkSession,
+      sfDir: String, docs: org.apache.spark.sql.DataFrame, key: String,
+      card: String => org.apache.spark.sql.Column,
+      inter: (String, String) => org.apache.spark.sql.Column)
+      : org.apache.spark.sql.DataFrame = {
+    val conf = spark.sessionState.conf
+    // reps are ≤1 row per document, so the documents' size estimate bounds
+    // them; above the threshold (or at -1) Spark picks the joins by size
+    val small = Tables.documents(spark, sfDir).queryExecution.optimizedPlan
+      .stats.sizeInBytes <= conf.autoBroadcastJoinThreshold
+    def bc(df: org.apache.spark.sql.DataFrame) = if (small) broadcast(df) else df
+    val reps = docs.groupBy(col("lang"), col(key)).agg(count(lit(1)).as("m"))
+    def side(s: String) = reps.select(col("lang"), col(key).as(s"k_$s"),
+      col("m").as(s"m_$s"), card(key).as(s"n_$s"))
+    // against broadcast reps the probe side is hash-repartitioned on its key
+    // (REPARTITION_BY_NUM: AQE never coalesces it), so the probe runs on
+    // every core and the (lang, k_a) roll-up below needs no exchange
+    val ra = if (small) side("a").repartition(conf.numShufflePartitions, col("k_a")) else side("a")
+    val repCounts = ra.join(bc(side("b")), "lang")
       .where(col("n_b") * lit(1.0) / col("n_a") >= 0.95) // implied length prune
-      .withColumn("inter", expr("sorted_intersect_size(toks_a, toks_b)"))
-      // self-rep pair (same set — reps are DISTINCT per lang, so array
-      // equality identifies it exactly) weighs m−1: the doc's own clones
-      .withColumn("w", when(col("toks_a") === col("toks_b"), col("m_b") - 1)
+      .withColumn("inter", inter("k_a", "k_b"))
+      .withColumn("w", when(col("k_a") === col("k_b"), col("m_b") - 1)
         .otherwise(col("m_b")))
-      .groupBy(col("lang"), col("toks_a"))
+      .groupBy(col("lang"), col("k_a"))
       .agg(
         sum(when(col("inter") === col("n_a"), col("w")).otherwise(0L)).as("n_supersets"),
         sum(when(col("inter") * lit(1.0) / col("n_a") >= 0.95, col("w")).otherwise(0L))
           .as("n_containers"))
-      .withColumnRenamed("toks_a", "toks")
-    // LEFT join + coalesce: for non-null docs the join is total (the self
-    // pair survives the prune, so every rep has a repCounts row); a
-    // null-text doc's NULL toks key matches nothing and gets the
-    // pre-r19 contract's (0,0) row; a null-LANG doc never joins in the
-    // oracle and stays dropped
-    t.where(col("lang").isNotNull)
-      .join(repCounts, Seq("lang", "toks"), "left")
+      .withColumnRenamed("k_a", key)
+    // repCounts reaches the join-back broadcast (or behind a sort-merge
+    // shuffle), so the output sort's sample job never redoes the pair work;
+    // a null-text doc's NULL key matches nothing and gets (0,0) from the
+    // LEFT join + coalesce; a null-LANG doc stays dropped
+    docs.where(col("lang").isNotNull)
+      .join(bc(repCounts), Seq("lang", key), "left")
       .select(col("doc_id"),
         coalesce(col("n_supersets"), lit(0L)).as("n_supersets"),
         coalesce(col("n_containers"), lit(0L)).as("n_containers"))

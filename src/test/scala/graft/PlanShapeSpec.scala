@@ -835,4 +835,101 @@ class PlanShapeSpec extends SparkSpecBase {
     assert(after == before,
       s"landing zone rewritten on second invocation: before=$before after=$after")
   }
+
+  test("dedup_containment: pair probe on a non-coalesced exchange, repCounts broadcast, one-job dictionary") {
+    import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, REPARTITION_BY_NUM, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    object aqe extends AdaptiveSparkPlanHelper
+    // (streamed, build) children of a broadcast hash join
+    def sides(j: BroadcastHashJoinExec): (SparkPlan, SparkPlan) =
+      if (j.buildSide == org.apache.spark.sql.catalyst.optimizer.BuildRight) (j.left, j.right)
+      else (j.right, j.left)
+    // the benchmark posture: tables cached, and a fresh session per run, so
+    // the encode memo is cold and the parquet schema is already known
+    val docs = Tables.documents(spark, sfDir)
+    docs.cache(); docs.count()
+    // runs the entry in a fresh session; returns the output, the executed
+    // plan and the number of jobs the builder ran
+    def run(confs: (String, String)*): (Seq[String], SparkPlan, Int) = {
+      val session = spark.newSession()
+      confs.foreach { case (k, v) => session.conf.set(k, v) }
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val df = try {
+        val d = Catalog.byKey("dedup_containment").run(session, sfDir)
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        d
+      } finally spark.sparkContext.removeSparkListener(listener)
+      val built = jobs.get
+      val out = rowsOf(df) // AQE finalizes the plan
+      (out, df.queryExecution.executedPlan, built)
+    }
+    try {
+      // both encodings, at Spark's default broadcast threshold (the sf0.001
+      // documents fit it, so the broadcast plan runs)
+      val outs = for ((mode, maxJobs) <- Seq("auto" -> 1, "off" -> 0)) yield {
+        val (out, plan, built) = run("graft.text.tokenBitmask" -> mode)
+        val tag = s"tokenBitmask=$mode"
+        // the mask builder's only job is the token dictionary (the load
+        // reuses the table's schema and the mask frame is cached lazily);
+        // the general path's builder runs none
+        assert(built <= maxJobs, s"$tag: builder ran $built jobs, expected <= $maxJobs")
+        val pairs = aqe.collect(plan) {
+          case j: BroadcastHashJoinExec if j.joinType == Inner => j
+        }
+        assert(pairs.size == 1, s"$tag: expected one pair join in:\n$plan")
+        val (probe, _) = sides(pairs.head)
+        // 1. the probe side sits under a REPARTITION_BY_NUM exchange (AQE
+        // never coalesces it), so the probe runs at the full shuffle width
+        val probeEx = aqe.collectFirst(probe) { case e: ShuffleExchangeLike => e }
+        assert(probeEx.exists(_.shuffleOrigin == REPARTITION_BY_NUM),
+          s"$tag: pair probe is not under a REPARTITION_BY_NUM exchange:\n$plan")
+        assert(probe.outputPartitioning.numPartitions ==
+            spark.sessionState.conf.numShufflePartitions,
+          s"$tag: pair probe runs on fewer partitions than spark.sql.shuffle.partitions:\n$plan")
+        // 2. repCounts reaches the doc-level join-back as a broadcast
+        val joinBack = aqe.collect(plan) {
+          case j: BroadcastHashJoinExec if j.joinType == LeftOuter => j
+        }
+        assert(joinBack.exists(j => aqe.find(sides(j)._2) {
+            case p: BroadcastHashJoinExec => p.joinType == Inner
+            case _ => false
+          }.nonEmpty),
+          s"$tag: repCounts does not reach the join-back through a broadcast:\n$plan")
+        // 3. the stage feeding the output sort holds no pair work, so the
+        // range-partition sample job re-reads the docs only
+        def stageLocal(p: SparkPlan): Seq[SparkPlan] = p match {
+          case _: QueryStageExec | _: ShuffleExchangeLike | _: BroadcastExchangeLike => Nil
+          case _ => p +: p.children.flatMap(stageLocal)
+        }
+        val sortEx = aqe.collectFirst(plan) {
+          case e: ShuffleExchangeLike if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+        }
+        assert(sortEx.nonEmpty, s"$tag: no range exchange for the output sort in:\n$plan")
+        assert(!stageLocal(sortEx.get.child).exists {
+            case j: BroadcastHashJoinExec => j.joinType == Inner
+            case _ => false
+          }, s"$tag: the pair join runs inside the stage that feeds the output sort:\n$plan")
+        out
+      }
+      assert(outs(0) == outs(1), "mask and general paths disagree")
+      // with size-based broadcasts off, both paths fall back to Spark's own
+      // join choice: nothing is broadcast, and the output is unchanged
+      for (mode <- Seq("auto", "off")) {
+        val (out, plan, _) = run("graft.text.tokenBitmask" -> mode,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+        assert(aqe.collect(plan) { case b: BroadcastExchangeLike => b }.isEmpty,
+          s"tokenBitmask=$mode: broadcast despite autoBroadcastJoinThreshold=-1:\n$plan")
+        assert(out == outs(0), s"tokenBitmask=$mode: fallback plan changed the output")
+      }
+    } finally docs.unpersist(blocking = true)
+  }
 }
