@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -17,15 +16,8 @@ object Bench {
     // coalescing: +10-14 s each without it) — AQE earns its keep, keep it.
     // At cluster scale sp is sized to data per deployment; 8 is this
     // box's small-stage floor, overridable via SPARK_GRAFT_SP.
-    val sp = sys.env.getOrElse("SPARK_GRAFT_SP", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", sp)
-      // UTC, matching Verify/GraftSession: without it a bare (non-sbt)
-      // launch makes the NTZ↔TIMESTAMP round-trips machine-tz-dependent
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sp = sys.env.getOrElse("SPARK_GRAFT_SP", "8").toInt
+    val spark = GraftSession.builder(s"local[$cpus]", sp).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the table cache once: the benchmark measures operator cost, not
     // 110 repeated parquet scans of the same inputs. This is the standard

@@ -19,6 +19,19 @@ import org.apache.spark.sql.SparkSession
   *    100 TB design point — ~800k input splits over 1000 executors; do
   *    NOT shrink it for small local files, AQE already coalesces tiny
   *    post-shuffle partitions.
+  *  - artifact isolation off: Spark 4 otherwise gives every session,
+  *    including each `newSession()` child, its own executor class loader,
+  *    and the codegen cache is keyed by class loader, so every child
+  *    re-compiles every generated class and runs it before the JIT has
+  *    compiled it. Off, one loader serves every session of the JVM and a
+  *    generated class compiles once. Safe here: nothing in graft adds
+  *    per-session artifacts (no `addArtifact`, `addJar` or `ADD JAR`),
+  *    and graft is not a Spark Connect server. The setting is read only
+  *    when a session is created, so an extension cannot set it: a session
+  *    graft does not build (the `spark.sql.extensions=graft.GraftExtensions`
+  *    route) needs `--conf spark.sql.artifact.isolation.enabled=false` on
+  *    spark-submit. A multi-tenant deployment that adds JARs per session
+  *    should keep isolation on.
   *
   * `install` wires in the engine's session-scoped extensions (native
   * vector functions + the HOF-fusion optimizer rule) — callable on ANY
@@ -26,18 +39,24 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  def build(master: String = s"local[${Runtime.getRuntime.availableProcessors}]",
-            shufflePartitions: Int = Runtime.getRuntime.availableProcessors)
-      : SparkSession = {
-    val s = SparkSession.builder()
+  /** The engine's session configuration, as a builder. Callers add only
+    * what differs: their master and shuffle partitions here, and anything
+    * else (extensions) on the returned builder. */
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
+    SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+
+  def build(master: String = s"local[${Runtime.getRuntime.availableProcessors}]",
+            shufflePartitions: Int = Runtime.getRuntime.availableProcessors)
+      : SparkSession = {
+    val s = builder(master, shufflePartitions).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     install(s)
     s

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: dump formatted physical plans of representative catalog
   * entries (the `.explain("formatted")` review loop, captured as an
   * artifact — see PLANS.md). Usage: runMain graft.Plans <sfDir> <outFile>
@@ -23,12 +21,8 @@ object Plans {
     // optional trailing keys: dump only those, EXECUTED first, so the
     // AQE-final plan (isFinalPlan=true, runtime join strategy) is shown
     val only = args.drop(2)
-    val spark = SparkSession.builder()
-      .master(if (only.nonEmpty) "local[32]" else "local[4]")
-      .config("spark.sql.shuffle.partitions", if (only.nonEmpty) "32" else "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cores = if (only.nonEmpty) 32 else 4
+    val spark = GraftSession.builder(s"local[$cores]", cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     val keys = if (only.nonEmpty) only.toSeq else representative

@@ -56,11 +56,12 @@ object GraphQueries {
       }
       edgeCache.computeIfAbsent((spark, sfDir, kind),
         _ => build.persist(graft.GraftConf.graphStorageLevel(spark)))
-    } else build
-    // memo off (memory-starved diagnostics mode): return UNCACHED — a
-    // per-call .cache() with no owner to unpersist it would accumulate a
-    // fresh cached frame per invocation, defeating the knob's purpose.
-    // Entries that reuse the frame within one query pay the rebuild.
+    } else
+      // memo off (memory-starved diagnostics mode): return UNCACHED — a
+      // per-call .cache() with no owner to unpersist it would accumulate a
+      // fresh cached frame per invocation, defeating the knob's purpose.
+      // Entries that reuse the frame within one query pay the rebuild.
+      build
 
   /** Profiling/test hook (ADVICE r18): drop every memoized edge frame via
     * the DATASET-level unpersist (which also unregisters the CacheManager

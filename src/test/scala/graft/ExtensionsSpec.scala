@@ -22,11 +22,8 @@ class ExtensionsSpec extends SparkSpecBase {
       // object through the same injectFunction/injectOptimizerRule path —
       // what this spec pins is GraftExtensions' wiring, not Spark's conf
       // plumbing.
-      val s = SparkSession.builder()
-        .master("local[4]")
+      val s = GraftSession.builder("local[4]", 4)
         .withExtensions(new GraftExtensions())
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
       assert(s ne orig, "builder returned the pre-existing session; extensions untested")
 

@@ -4,16 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local session for all specs — mirrors the driver's Verify config
-  * (UTC, small shuffle partitions) so tests rehearse the graded path. */
+/** Shared local session for all specs — built from the engine's session
+  * configuration ([[GraftSession.builder]], as Verify and Bench are) with
+  * small shuffle partitions, so tests rehearse the graded path. */
 object SparkSpecBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder("local[4]", 4).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
