@@ -1,12 +1,24 @@
 package graft
 object Bench {
+  /** Single-thread CPU calibration constant: the same VM measured 77 s /
+    * 106 s / 135 s for near-identical catalogs across boots (host steal +
+    * per-boot CPU variance). A fixed arithmetic loop (2×10⁸ multiply-adds)
+    * timed next to a measurement lets any two artifacts be normalized
+    * (total / calib) before comparison. */
+  def calibSeconds(): Double = {
+    val t0 = System.nanoTime()
+    var acc = 0L; var i = 0L
+    while (i < 200000000L) { acc += i * i; i += 1 }
+    if (acc == 42L) println("") // defeat dead-code elimination
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // 32 cores on the reference host; never more threads than the machine has
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    // shuffle.partitions=8 with AQE ON (r14 floor work, BenchGrid
-    // full-catalog same-JVM A/B over 4 postures × 2 reps): sp sets the
+    val cpus = GraftSession.localCores
+    // shuffle.partitions=8 with AQE ON (r14 floor work, full-catalog
+    // same-JVM A/B over 4 postures × 2 reps; re-checked in BASELINE.md
+    // round-16): sp sets the
     // INITIAL reduce partition count; AQE still coalesces tiny stages and
     // splits skewed ones by size, so correctness and skew posture are
     // unchanged while every sub-second entry stops paying 32-partition
@@ -170,9 +182,7 @@ object Bench {
     // never shipped. toRdd pays every projection and join the consumer
     // pays, INCLUDING the final presentation orderBy that count() used to
     // eliminate (EliminateSorts) — output sorts are over result-sized
-    // frames, so the delta is small and honest. SPARK_GRAFT_BENCH_ACTION=
-    // count restores the old action for A/B against pre-r18 numbers.
-    val execAction = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "exec") == "exec"
+    // frames, so the delta is small and honest.
     // Per-entry drift adjudicators (VERDICT r19 #2): the five same-code r19
     // runs spanned 265-338 s and the driver's own run drew a 19.25 s
     // src_xml_extract vs 4-6.5 s in every builder run — an UNATTRIBUTED
@@ -198,10 +208,8 @@ object Bench {
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val gc0 = gcMillis; val cpu0 = cpuNanos
       val t0 = System.nanoTime()
-      try {
-        val df = fn(spark, sfDir)
-        if (execAction) df.queryExecution.toRdd.count() else df.count()
-      } catch {
+      try fn(spark, sfDir).queryExecution.toRdd.count()
+      catch {
         // NonFatal only (ADVICE r18): a fatal JVM error (OOM) taints every
         // later same-JVM timing — crash the bench rather than report a
         // distorted-but-"valid" total (same rationale as CoverageSweep/
@@ -237,19 +245,11 @@ object Bench {
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val gcTotal = results.map(_._3).sum
     val cpuTotal = results.map(_._4).sum
-    // Single-thread CPU calibration constant: the same VM measured 77 s /
-    // 106 s / 135 s for near-identical catalogs across boots (host steal +
-    // per-boot CPU variance). A fixed arithmetic loop timed here lets any
-    // two bench JSONs be normalized (total / calib) before comparison.
-    val calib = secondsOf {
-      var acc = 0L; var i = 0L
-      while (i < 200000000L) { acc += i * i; i += 1 }
-      if (acc == 42L) println("") // defeat dead-code elimination
-    }
+    val calib = calibSeconds()
     val phases = Seq("tables_s" -> tablesS, "staging_s" -> stagingS,
       "warm_pass_s" -> warmPassS, "warm_hot_s" -> warmHotS, "calib_s" -> calib)
       .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","calib_sec":$calib,"shared_warm":$sharedWarm,"warm_hot":"${warmHot.mkString(",")}","action":"${if (execAction) "exec" else "count"}","gc_sec":$gcMap,"cpu_sec":$cpuMap,"phases":$phases}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","calib_sec":$calib,"shared_warm":$sharedWarm,"warm_hot":"${warmHot.mkString(",")}","action":"exec","gc_sec":$gcMap,"cpu_sec":$cpuMap,"phases":$phases}"""
     // The JSON travels three redundant ways (VERDICT.md r1 #5: the driver
     // parsed nothing from round 1's single println buried in sbt noise):
     // (1) a file the driver can read directly, (2) an early stdout line,
@@ -272,7 +272,7 @@ object Bench {
     // reads first, and the "queries_full" pointer names where the rest is.
     val lastLine = {
       val bySlowest = results.sortBy(-_._2)
-      val head = f"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","calib_sec":$calib,"shared_warm":$sharedWarm,"action":"${if (execAction) "exec" else "count"}","gc_total_sec":$gcTotal%.1f,"cpu_total_sec":$cpuTotal%.1f,"n_queries":${results.size},"queries_full":"$outFile","queries":{"""
+      val head = f"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","calib_sec":$calib,"shared_warm":$sharedWarm,"action":"exec","gc_total_sec":$gcTotal%.1f,"cpu_total_sec":$cpuTotal%.1f,"n_queries":${results.size},"queries_full":"$outFile","queries":{"""
       val tailStr = "}}"
       val budget = 1800 - head.length - tailStr.length
       val parts = scala.collection.mutable.ArrayBuffer[String]()

@@ -56,9 +56,9 @@ object GraftConf {
   /** Storage level for the graph family's cached frames (the shared edge
     * memos and the entry-local degree / oriented-edge / top-k-neighbor
     * frames). Default MEMORY_AND_DISK_SER — the r18 posture experiment
-    * (ProfileGraphStorage, min-of-2 interleaved reps, one JVM, clean
-    * calib) tested the r17 heap attribution for the one-box 100× graph
-    * residuals and CONFIRMED it: triangle 287.5 → 201.8 s (×0.70),
+    * (min-of-2 interleaved reps, one JVM, clean calib; BASELINE.md
+    * round-18 "Graph one-box heap attribution") tested the r17 heap
+    * attribution for the one-box 100× graph residuals and CONFIRMED it: triangle 287.5 → 201.8 s (×0.70),
     * jaccard 246.8 → 190.1 s (×0.77) at 100×, and neutral-to-faster at
     * sf0.1 too (label_prop 5.2 → 3.8 s, others −0.3-0.4 s, none slower)
     * — the serialized blocks relieve exactly the GC tax the exponent was
@@ -67,45 +67,6 @@ object GraftConf {
   def graphStorageLevel(spark: SparkSession): org.apache.spark.storage.StorageLevel =
     org.apache.spark.storage.StorageLevel.fromString(
       get(spark, "graft.graph.storageLevel", "MEMORY_AND_DISK_SER"))
-
-  /** r19 one-box graph-residual experiment (VERDICT r18 #5): localCheckpoint
-    * the oriented-edge / top-w-neighbor frames instead of persist-with-
-    * lineage, truncating the lineage that keeps the upstream wide frames
-    * (union'd edge list, degree joins) referenced through the closure's
-    * heavy phase. Default FALSE — measured NEGATIVE-to-neutral at 100×
-    * (ProfileGraphStorage, best-of-2 interleaved reps in one JVM, with
-    * the r19 memo-eviction fix so each measurement rebuilds the shared
-    * memo at its own posture: triangle 248.6 → 299.9 s (×1.21 worse),
-    * jaccard 268.7 → 251.0 s (×0.93, inside the window's noise — rep
-    * calibs swung 0.065-0.123 across the leg): localCheckpoint pins
-    * deserialized MEMORY_AND_DISK blocks, surrendering exactly the
-    * serialized-block GC relief the shipped SER default buys, and the
-    * lineage it truncates holds plans, not rows, so there was no
-    * liveness to reclaim on one box. Knob retained for true
-    * multi-executor deployments, where checkpoint also shortens recovery
-    * lineage. Full leg in BASELINE.md round-19 addendum. */
-  def graphCheckpoint(spark: SparkSession): Boolean =
-    get(spark, "graft.graph.checkpoint", "false").toBoolean
-
-  /** r14 segment-contraction pre-pass toggle for the chain-candidate
-    * propagation entries (dedup_minhash_lsh, dedup_cluster_lsh): star
-    * verified chain runs to their min node before ccLabels so PATH-shaped
-    * components cost fewer serialized pointer-jump rounds. Connectivity
-    * is identical either way (star edges only connect already-connected
-    * nodes — output row-identical, checked by ProfileContraction).
-    *
-    * Default FALSE — measured negative at sf0.1 (ProfileContraction,
-    * same-JVM interleaved ×3): ccLabels converges in 2 rounds with OR
-    * without the pre-pass (the union of 6 salted chain orders already
-    * gives near-random-graph connectivity, so component diameter is
-    * small), and 2 rounds is the loop's floor (propagate + confirm). The
-    * pre-pass therefore bought zero rounds and cost +1.5–2.5 s/entry in
-    * adjacency caching + ok1 join + two extra window passes. Turn it on
-    * for corpora whose verified chains DO form long paths (e.g. few
-    * salts, heavily ordered near-dup chains — watch `graft.cc.debug`
-    * round counts exceed 2-3). */
-  def dedupStarContraction(spark: SparkSession): Boolean =
-    get(spark, "graft.dedup.starContraction", "false").toBoolean
 
   /** SimHash: max Hamming distance accepted as near-dup. Block count for
     * candidate generation is derived: maxHamming+1 blocks (pigeonhole —

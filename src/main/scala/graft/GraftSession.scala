@@ -53,6 +53,12 @@ object GraftSession {
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
 
+  /** Local-mode core count for the engine's mains (`Bench`, `Verify`, the
+    * tools): `SPARK_GRAFT_CPUS`, else the machine's cores capped at 32, the
+    * reference host's count — never more threads than the machine has. */
+  def localCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors))
+
   def build(master: String = s"local[${Runtime.getRuntime.availableProcessors}]",
             shufflePartitions: Int = Runtime.getRuntime.availableProcessors)
       : SparkSession = {

@@ -40,8 +40,8 @@ object Tables {
     * queries within a session, so handing every caller the same analyzed
     * relation changes no semantics (the testdata dirs never mutate
     * mid-session). `graft.tables.memo=false` restores the old behavior
-    * (the A/B lever FloorProbe uses). Stopped sessions are evicted on
-    * lookup, same pattern as the other driver-side memos. */
+    * (the r14 floor A/B lever, BASELINE.md round-16). Stopped sessions
+    * are evicted on lookup, same pattern as the other driver-side memos. */
   private val loadCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String, Int), DataFrame]()
 

@@ -63,22 +63,6 @@ object GraphQueries {
       // Entries that reuse the frame within one query pay the rebuild.
       build
 
-  /** Profiling/test hook (ADVICE r18): drop every memoized edge frame via
-    * the DATASET-level unpersist (which also unregisters the CacheManager
-    * entry — a raw RDD unpersist frees blocks but leaves the
-    * InMemoryRelation registered, so the memo map kept returning a frame
-    * pinned at its build-time storage level). Storage-posture A/Bs
-    * (ProfileGraphStorage) must call this between postures or every
-    * posture after the first measures a stale memo. */
-  private[graft] def clearEdgeCache(): Unit = {
-    val it = edgeCache.entrySet().iterator()
-    while (it.hasNext) {
-      val df = it.next().getValue
-      if (!df.sparkSession.sparkContext.isStopped) df.unpersist(blocking = true)
-      it.remove()
-    }
-  }
-
   /** Undirected-as-directed txn edge set (2·custkey / 2·suppkey+1 ids),
     * one row per distinct trading pair — pagerank + degree_stats. */
   private[graft] def txnEdges(spark: org.apache.spark.sql.SparkSession,
@@ -280,19 +264,13 @@ object GraphQueries {
     // orient: keep an edge only in its (degree, id)-ascending direction;
     // cached because the closure probes it as both the edge list and the
     // adjacency-array source
-    val oPlan = e.join(d.withColumnRenamed("u", "uu").withColumnRenamed("dg", "du"),
+    val o = e.join(d.withColumnRenamed("u", "uu").withColumnRenamed("dg", "du"),
         col("u") === col("uu"))
       .join(d.withColumnRenamed("u", "vv").withColumnRenamed("dg", "dv"),
         col("v") === col("vv"))
       .filter(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")))
       .select(col("u"), col("v"))
-    // graft.graph.checkpoint=true swaps persist for an eager localCheckpoint
-    // (lineage truncated before the closure's heavy phase) — the r19
-    // residual experiment; see GraftConf.graphCheckpoint for the measured
-    // verdict (negative at 100×, default stays persist)
-    val o = if (graft.GraftConf.graphCheckpoint(spark))
-      oPlan.localCheckpoint(true)
-    else oPlan.persist(graft.GraftConf.graphStorageLevel(spark))
+      .persist(graft.GraftConf.graphStorageLevel(spark))
     // edge-iterator closure: per-node sorted out-neighbor arrays (order is
     // irrelevant to the intersect size, sort_array just pins determinism of
     // the intermediate), joined to the edge list on plain node keys
@@ -399,12 +377,9 @@ object GraphQueries {
     val e = pp.select(col("a").as("u"), col("b").as("v"), col("w"))
       .unionByName(pp.select(col("b").as("u"), col("a").as("v"), col("w")))
     val wTop = Window.partitionBy(col("u")).orderBy(col("w").desc, col("v"))
-    val topwPlan = e.withColumn("rn", row_number().over(wTop))
+    val topw = e.withColumn("rn", row_number().over(wTop))
       .where(col("rn") <= 32).select(col("u"), col("v"))
-    // same checkpoint experiment seam as triangleSummary's oriented frame
-    val topw = if (graft.GraftConf.graphCheckpoint(spark))
-      topwPlan.localCheckpoint(true)
-    else topwPlan.persist(graft.GraftConf.graphStorageLevel(spark))
+      .persist(graft.GraftConf.graphStorageLevel(spark))
     val d = topw.groupBy(col("v")).agg(count(lit(1)).as("dg"))
     // Wedge enumeration stays the topw⋈topw self-join. The r15 100× leg
     // A/B'd a partition-local array-explode spelling (collect ≤32

@@ -405,18 +405,12 @@ object TextQueries {
     *     pair missed in one band is adjacent in another.
     *
     * @return (members: (fp, doc_id), repIds: (fp, rep_id),
-    *          repPairs: (fp_a, fp_b, jaccard) with jaccard ≥ threshold,
-    *          chainAdj: Some(cached per-salt adjacency stream
-    *          (salt, band, bucket, pos, fp, n_toks, n1fp, n1n)) when
-    *          chainCandidates — the (salt, band, bucket, pos) context the
-    *          old explode threw away, kept so [[minhashLsh]] can run the
-    *          r14 segment-contraction pre-pass; None for the blocked form)
+    *          repPairs: (fp_a, fp_b, jaccard) with jaccard ≥ threshold)
     */
   private[graft] def minhashRepStage(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                               chainCandidates: Boolean)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-         org.apache.spark.sql.DataFrame,
-         Option[org.apache.spark.sql.DataFrame]) = {
+         org.apache.spark.sql.DataFrame) = {
     // corpus-dependent knobs — spark.conf, defaults profiled in round 1
     // (graft.dedup.minhash.{hashes,bands,threshold}; VERDICT.md r1 #5)
     val nHashes = graft.GraftConf.minhashHashes(spark)
@@ -482,15 +476,15 @@ object TextQueries {
     // rounding-boundary pair the verify would keep can be dropped.
     def ratioOk(na: org.apache.spark.sql.Column, nb: org.apache.spark.sql.Column) =
       least(na, nb) >= greatest(na, nb) * (threshold - 1e-4)
-    val (candidates, chainAdj) = if (!chainCandidates) {
+    val candidates = if (!chainCandidates) {
       val l = banded.select(col("band"), col("bucket"), col("fp").as("fp_a"),
         col("n_toks").as("n_a"))
       val r = banded.select(col("band"), col("bucket"), col("fp").as("fp_b"),
         col("n_toks").as("n_b"))
-      (l.join(r, Seq("band", "bucket"))
+      l.join(r, Seq("band", "bucket"))
         .where(col("fp_a") < col("fp_b") && ratioOk(col("n_a"), col("n_b")))
         .select(col("fp_a"), col("fp_b"))
-        .distinct(), None)
+        .distinct()
     } else {
       // chain + skip-level candidates over SEVERAL independent bucket
       // orders (design rationale in the scaladoc above; each window sort
@@ -504,37 +498,29 @@ object TextQueries {
       // widened because this entry's 5 coarse bands give fewer
       // independent draws than clusterLsh's 16).
       val salts = graft.GraftConf.minhashChainSalts(spark)
-      // ONE window op per salt computes pos + both lead levels (the
+      // ONE window op per salt computes both lead levels (the
       // lead(1)/lead(2)-as-separate-branches form paid the bucket sort
-      // twice per salt — measured at sf0.1). The per-salt frames union
-      // into one CACHED adjacency stream feeding both the candidate set
-      // below and the caller's segment-contraction pre-pass, which needs
-      // the (salt, band, bucket, pos) context the explode throws away.
+      // twice per salt — measured at sf0.1); the per-salt frames union
+      // into one adjacency stream
       val adj = (0 until salts).map { s =>
         val ord =
           if (s == 0) Seq(col("n_toks"), xxhash64(col("band"), col("fp")), col("fp"))
           else Seq(xxhash64(lit(s), col("band"), col("fp")), col("fp"))
         val chainW = Window.partitionBy(col("band"), col("bucket")).orderBy(ord: _*)
-        banded.select(lit(s).as("salt"), col("band"), col("bucket"),
-          row_number().over(chainW).as("pos"),
-          col("fp"), col("n_toks"),
+        banded.select(col("fp"), col("n_toks"),
           lead(col("fp"), 1).over(chainW).as("n1fp"),
           lead(col("n_toks"), 1).over(chainW).as("n1n"),
           lead(col("fp"), 2).over(chainW).as("n2fp"),
           lead(col("n_toks"), 2).over(chainW).as("n2n"))
       }.reduce(_ unionByName _)
-      // the cache only pays when a second consumer (the contraction
-      // pre-pass) will scan the stream; with the knob off, candidates are
-      // the sole consumer and the uncached explode path is strictly cheaper
-      if (graft.GraftConf.dedupStarContraction(spark)) adj.cache()
-      (adj
+      adj
         .select(col("fp"), col("n_toks"), explode(array(
           struct(col("n1fp").as("nfp"), col("n1n").as("nn")),
           struct(col("n2fp").as("nfp"), col("n2n").as("nn")))).as("nx"))
         .where(col("nx.nfp").isNotNull && ratioOk(col("n_toks"), col("nx.nn")))
         .select(least(col("fp"), col("nx.nfp")).as("fp_a"),
           greatest(col("fp"), col("nx.nfp")).as("fp_b"))
-        .distinct(), Some(adj))
+        .distinct()
     }
     val ta = reps.select(col("fp").as("fp_a"), col("toks").as("toks_a"))
     val tb = reps.select(col("fp").as("fp_b"), col("toks").as("toks_b"))
@@ -549,59 +535,7 @@ object TextQueries {
         round(inter * 1.0 / (size(col("toks_a")) + size(col("toks_b")) - inter), 4))
       .where(col("jaccard") >= threshold)
       .select(col("fp_a"), col("fp_b"), col("jaccard"))
-    (members, reps.select(col("fp"), col("rep_id")), repPairs, chainAdj)
-  }
-
-  /** r14 segment-contraction pre-pass (VERDICT r13 #2): collapse the
-    * PATH-shaped runs that chain candidates produce before min-label
-    * propagation pays pointer-jump rounds for their diameter.
-    *
-    * Within one (salt, band, bucket) chain order, the VERIFIED lead-1
-    * edges partition the bucket into maximal runs ("segments") of
-    * consecutively-linked nodes — exactly the shapes whose diameter costs
-    * [[ccLabels]] extra serialized driver rounds. One window pass finds
-    * them: mark a break wherever the edge from the previous position was
-    * not verified (running-sum of breaks = segment id), then star every
-    * segment member to the segment's min node. The star edges connect
-    * only nodes already connected by verified chain edges, so the
-    * component structure is IDENTICAL — only the diameter drops (a
-    * length-k run becomes a depth-1 star). Verified lead-2 skip edges and
-    * cross-bucket overlaps are retained raw by the caller, so no
-    * connectivity is lost either.
-    *
-    * @param adj      cached chain adjacency (salt, band, bucket, pos,
-    *                 node, n1node) — node/n1node in whatever id space the
-    *                 caller clusters in (fp or doc_id)
-    * @param verified the verified pair set (a, b) with a < b, same space
-    * @return star edges (a, b) with a < b, ready to union with `verified`
-    */
-  private def segmentStarEdges(adj: org.apache.spark.sql.DataFrame,
-                               verified: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val v = verified.select(col("a").as("va"), col("b").as("vb"))
-      .withColumn("vok", lit(true))
-    // least/greatest over (node, null n1node at run end) degenerates to
-    // (node, node), which never matches a verified pair (no self-pairs) —
-    // exactly the wanted ok1=false for the last position of a bucket
-    val ok = adj.join(v,
-        least(col("node"), col("n1node")) === col("va") &&
-        greatest(col("node"), col("n1node")) === col("vb"), "left")
-      .select(col("salt"), col("band"), col("bucket"), col("pos"),
-        col("node"), coalesce(col("vok"), lit(false)).as("ok1"))
-    val wseg = Window.partitionBy(col("salt"), col("band"), col("bucket"))
-      .orderBy(col("pos"))
-    val segW = Window.partitionBy(col("salt"), col("band"), col("bucket"),
-      col("seg"))
-    ok
-      // row i starts a new segment iff the edge (i-1, i) was not verified
-      .withColumn("brk",
-        when(lag(col("ok1"), 1, false).over(wseg), lit(0)).otherwise(lit(1)))
-      .withColumn("seg", sum(col("brk"))
-        .over(wseg.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("lab", min(col("node")).over(segW))
-      .where(col("node") =!= col("lab"))
-      .select(col("lab").as("a"), col("node").as("b"))
-      .distinct()
+    (members, reps.select(col("fp"), col("rep_id")), repPairs)
   }
 
   /** Pair ENUMERATION over the verified rep graph — the spec-scale
@@ -620,7 +554,7 @@ object TextQueries {
     */
   private[graft] def minhashPairs(spark: org.apache.spark.sql.SparkSession,
                                   sfDir: String): org.apache.spark.sql.DataFrame = {
-    val (members, _, repPairs, _) = minhashRepStage(spark, sfDir, chainCandidates = false)
+    val (members, _, repPairs) = minhashRepStage(spark, sfDir, chainCandidates = false)
     // intra-group: identical token sets, Jaccard exactly 1.0
     val ma = members.select(col("fp"), col("doc_id").as("doc_a"))
     val mb = members.select(col("fp"), col("doc_id").as("doc_b"))
@@ -662,36 +596,12 @@ object TextQueries {
     * No oracle (xxhash64 minhash isn't reproducible in DuckDB).
     */
   private val minhashLsh = CatalogEntry.noOracle("dedup_minhash_lsh") { (spark, sfDir) =>
-    val (members, repIds, repPairs0, chainAdj) =
+    val (members, repIds, repPairs) =
       minhashRepStage(spark, sfDir, chainCandidates = true)
-    val contraction = graft.GraftConf.dedupStarContraction(spark)
-    // with the pre-pass on, the verified pair set feeds the contraction's
-    // ok1 probe AND the edge union — cached so the exact-Jaccard verify
-    // subtree (the stage's expensive op) runs once
-    val repPairs = {
-      val p = repPairs0.select(col("fp_a"), col("fp_b"))
-      if (contraction) p.cache() else p
-    }
-    // segment-contraction pre-pass ([[segmentStarEdges]]): chain
-    // candidates make PATH-shaped components whose diameter costs
-    // ccLabels extra serialized pointer-jump rounds; starring each
-    // verified run to its min fp collapses them to depth 1 before
-    // propagation. Union with the raw verified pairs (covers lead-2 skip
-    // edges and cross-bucket overlaps) — connectivity identical, only
-    // the diameter drops.
-    val fpEdges = if (!contraction) repPairs else {
-      val star = segmentStarEdges(
-        chainAdj.get.select(col("salt"), col("band"), col("bucket"),
-          col("pos"), col("fp").as("node"), col("n1fp").as("n1node")),
-        repPairs.select(col("fp_a").as("a"), col("fp_b").as("b")))
-      repPairs
-        .unionByName(star.select(col("a").as("fp_a"), col("b").as("fp_b")))
-        .distinct()
-    }
     // verified rep pairs → edges in rep_id (= min member doc_id) space;
     // min-propagation over rep ids therefore converges to the min doc_id
     // of the whole member component, giving a deterministic cluster label
-    val edges = fpEdges
+    val edges = repPairs.select(col("fp_a"), col("fp_b"))
       .join(repIds.select(col("fp").as("fp_a"), col("rep_id").as("src")), "fp_a")
       .join(repIds.select(col("fp").as("fp_b"), col("rep_id").as("dst")), "fp_b")
       .select(col("src"), col("dst"))
@@ -831,7 +741,7 @@ object TextQueries {
   private val simhashCluster = CatalogEntry.noOracle("dedup_simhash_cluster") { (spark, sfDir) =>
     val maxHamming = graft.GraftConf.simhashMaxHamming(spark)
     // .cache() on the shared frames is load-bearing, not an optimization
-    // nicety (r17 100× attribution, ProfileSimhashCc): the fingerprint
+    // nicety (r17 100× attribution, BASELINE.md round-17): the fingerprint
     // aggregation is referenced by BOTH banded join sides, the rep map
     // (twice), the doc fan-out, and the size roll-up — and Spark
     // materializes each reference independently, so the uncached entry
@@ -1776,22 +1686,16 @@ object TextQueries {
     val ncBin = floor((col("n_chars") + pmod(col("band"), lit(2)) * 10) / 20)
     val chainW = Window.partitionBy(col("band"), col("bucket"), col("lang"))
       .orderBy(ncBin, xxhash64(col("band"), col("doc_id")), col("doc_id"))
-    // ONE window op computes pos + both lead levels (the per-k branches
-    // paid the bucket sort twice); the cached adjacency stream feeds the
-    // candidate set AND the r14 segment-contraction pre-pass below
-    val adj = banded
-      .select(col("band"), col("bucket"), col("lang"),
-        row_number().over(chainW).as("pos"),
-        col("doc_id"), col("fp"), col("n_chars"),
+    // ONE window op computes both lead levels (the per-k branches paid
+    // the bucket sort twice)
+    val cand = banded
+      .select(col("doc_id"), col("fp"), col("n_chars"),
         lead(col("doc_id"), 1).over(chainW).as("n1id"),
         lead(col("fp"), 1).over(chainW).as("n1fp"),
         lead(col("n_chars"), 1).over(chainW).as("n1nc"),
         lead(col("doc_id"), 2).over(chainW).as("n2id"),
         lead(col("fp"), 2).over(chainW).as("n2fp"),
         lead(col("n_chars"), 2).over(chainW).as("n2nc"))
-    // cache only pays when the contraction pre-pass re-scans the stream
-    if (graft.GraftConf.dedupStarContraction(spark)) adj.cache()
-    val cand = adj
       .select(col("doc_id"), col("fp"), col("n_chars"), explode(array(
         struct(col("n1id").as("nid"), col("n1fp").as("nfp"), col("n1nc").as("nnc")),
         struct(col("n2id").as("nid"), col("n2fp").as("nfp"), col("n2nc").as("nnc")))).as("nx"))
@@ -1805,8 +1709,7 @@ object TextQueries {
     val ga = reps.select(col("fp").as("fa"), col("htoks").as("toks_a"))
     val gb = reps.select(col("fp").as("fb"), col("htoks").as("toks_b"))
     val inter = expr("sorted_intersect_size_l(toks_a, toks_b)")
-    val contraction = graft.GraftConf.dedupStarContraction(spark)
-    // Verify at REP granularity, not per doc pair (r14 ProfileClusterLsh:
+    // Verify at REP granularity, not per doc pair (r14, BASELINE.md round-14:
     // 108k doc-pair candidates at sf0.1 carry far fewer DISTINCT (fa, fb)
     // token-set pairs — clone-heavy corpora re-ran the same O(|toks|)
     // intersect once per clone adjacency, and the Jaccard predicate
@@ -1823,28 +1726,7 @@ object TextQueries {
             (size(col("toks_a")) + size(col("toks_b")) - inter), 4) >= 0.5)
           .select(col("fa"), col("fb")))
     }
-    // with the pre-pass on, cached: feeds the contraction's ok1 probe AND
-    // the edge union — without it the rep-level verify would run twice
-    val chainEdges = {
-      val e = cand.join(fpOk, Seq("fa", "fb")).select(col("src"), col("dst"))
-      if (contraction) e.cache() else e
-    }
-    // segment-contraction pre-pass ([[segmentStarEdges]], same rationale
-    // as dedup_minhash_lsh): collapse verified chain runs to stars so
-    // ccLabels converges in fewer serialized rounds.
-    val star = if (!contraction) chainEdges.limit(0) else segmentStarEdges(
-      adj.select(lit(0).as("salt"), col("band"),
-        // chain partition here is (band, bucket, lang) — fold lang into
-        // the bucket key to fit the helper's (salt, band, bucket) shape.
-        // lang must be null-proofed: concat null-propagates, and a NULL
-        // folded key would merge EVERY bucket of a band into one window
-        // partition with duplicate pos values — nondeterministic tie order
-        // could then emit star edges between unverified nodes, breaking
-        // the output-identical invariant on null-lang corpora
-        concat(col("bucket"), lit("#"), coalesce(col("lang"), lit("\u0000"))).as("bucket"),
-        col("pos"), col("doc_id").as("node"), col("n1id").as("n1node")),
-      chainEdges.select(col("src").as("a"), col("dst").as("b")))
-      .select(col("a").as("src"), col("b").as("dst"))
+    val chainEdges = cand.join(fpOk, Seq("fa", "fb")).select(col("src"), col("dst"))
     // clone members (identical token set ⇒ jaccard exactly 1.0) connect
     // directly wherever the lang/±20 predicate holds — recall 1.0, no LSH.
     // CHAIN spelling, not all-pairs (r18 cliff 8, found by the clique
@@ -1871,7 +1753,7 @@ object TextQueries {
         && col("nc_b").between(col("nc_a") - 20, col("nc_a") + 20))
       .select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
-    ccLabels(intra.unionByName(chainEdges).unionByName(star).distinct())
+    ccLabels(intra.unionByName(chainEdges).distinct())
       .select(col("node").as("doc_id"), col("comp").as("comp_id"))
       .orderBy(col("doc_id"))
   }

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.{SparkEntry, Tables}
+import graft.{Bench, GraftSession, SparkEntry, Tables}
 
 /** Single-rep 100×-coverage cliff sweep (r17) — dev tool.
   *
@@ -20,26 +19,16 @@ import graft.{SparkEntry, Tables}
 object CoverageSweep {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SCALE_DIR", "/tmp/sfsynth2")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.localCores
+    val spark = GraftSession.builder(s"local[$cpus]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val cached = Tables.names.map { n =>
       val df = Tables.load(spark, dir, n); df.cache(); df.count(); df
     }
-    // single-thread CPU calib (same constant as Bench): printed before and
-    // after so a sweep taken in a degraded host window is adjudicable
-    def calib(): Double = {
-      val t0 = System.nanoTime(); var acc = 0L; var i = 0L
-      while (i < 200000000L) { acc += i * i; i += 1 }
-      if (acc == 42L) println("")
-      (System.nanoTime() - t0) / 1e9
-    }
-    println(f"[cov] calib_start=${calib()}%.3f s")
+    // single-thread CPU calib (Bench's): printed before and after so a
+    // sweep taken in a degraded host window is adjudicable
+    println(f"[cov] calib_start=${Bench.calibSeconds()}%.3f s")
     args.foreach { key =>
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       cached.foreach(_.cache()); cached.foreach(_.count())
@@ -56,7 +45,7 @@ object CoverageSweep {
             s"${Option(e.getMessage).getOrElse("").take(200)}")
       }
     }
-    println(f"[cov] calib_end=${calib()}%.3f s")
+    println(f"[cov] calib_end=${Bench.calibSeconds()}%.3f s")
     spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Canonical output fingerprint for A/B-ing no-oracle entries across
   * refactors (the DistinctValue helper extraction must be bit-identical):
@@ -14,12 +13,8 @@ import graft.SparkEntry
 object OutputHash {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.localCores
+    val spark = GraftSession.builder(s"local[$cpus]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     args.drop(1).foreach { key =>
       val df = SparkEntry.queries(key)(spark, sfDir)

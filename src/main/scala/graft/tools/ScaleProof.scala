@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.{SparkEntry, Tables}
+import graft.{Bench, GraftSession, SparkEntry, Tables}
 
 /** Same-JVM scale measurement (VERDICT r11 #1; phased mode r15) — dev tool.
   *
@@ -40,21 +39,9 @@ object ScaleProof {
     val base  = sys.env.getOrElse("SCALE_BASE", "/root/testdata/sf0.1")
     val synth = sys.env.getOrElse("SCALE_SYNTH", "/tmp/sfsynth1")
     val phased = sys.env.getOrElse("SCALE_PHASED", "0") == "1"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.localCores
+    val spark = GraftSession.builder(s"local[$cpus]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    def calib(): Double = {
-      val t0 = System.nanoTime()
-      var acc = 0L; var i = 0L
-      while (i < 200000000L) { acc += i * i; i += 1 }
-      if (acc == 42L) println("")
-      (System.nanoTime() - t0) / 1e9
-    }
 
     if (!phased) {
       val cached = Seq(base, synth).flatMap { dir =>
@@ -134,7 +121,7 @@ object ScaleProof {
           .foreach(_.unpersist(blocking = true))
         spark.sqlContext.clearCache()
         System.gc()
-        println(f"[scale] phase $label done, calib=${calib()}%.3f s")
+        println(f"[scale] phase $label done, calib=${Bench.calibSeconds()}%.3f s")
         best
       }
       val synthBest = runPhase(synth, "synth")

@@ -1,10 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.functions._
 
-import graft.Catalog
+import graft.{Catalog, GraftSession}
 
 /** r20 optimization round — mechanical audit of presentation-sort
   * totality. The scan-parallelism floor exposed four entries whose final
@@ -25,12 +24,8 @@ object SortTotalityAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SP", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.localCores
+    val spark = GraftSession.builder(s"local[$cpus]", sys.env.getOrElse("SPARK_GRAFT_SP", "8").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     var flagged = 0; var checked = 0; var noSort = 0
     Catalog.stamped.filter(_.duckdbSql.isDefined).foreach { e =>

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -40,13 +41,8 @@ object SynthScale {
 
   def main(args: Array[String]): Unit = {
     val src = args(0); val out = args(1); val replicas = args(2).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.localCores
+    val spark = GraftSession.builder(s"local[$cpus]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def shiftCols(df: DataFrame, off: Long, cols: String*): DataFrame =

@@ -58,28 +58,6 @@ class CcSpec extends SparkSpecBase {
     assert(bad.isEmpty, s"label mismatches (node, got, want): ${bad.take(10)}")
   }
 
-  test("segment-contraction pre-pass is output-identical on both chain entries (r14)") {
-    // graft.dedup.starContraction stars verified chain runs to their min
-    // node before ccLabels; connectivity (hence every output row) must be
-    // IDENTICAL with the pre-pass on or off — the knob may only move cost.
-    // Default is off (measured pure overhead at sf0.1: components already
-    // converge in ccLabels' 2-round floor); this keeps the on-path
-    // exercised so the corpus-tunable knob cannot rot.
-    for (key <- Seq("dedup_minhash_lsh", "dedup_cluster_lsh")) {
-      def run(): Array[String] =
-        Catalog.byKey(key).run(spark, sfDir).collect().map(_.toString)
-      spark.conf.set("graft.dedup.starContraction", "false")
-      val off = run()
-      spark.conf.set("graft.dedup.starContraction", "true")
-      val on = try run() finally
-        spark.conf.set("graft.dedup.starContraction", "false")
-      assert(on.sameElements(off),
-        s"$key: contraction changed the output — " +
-          s"off=${off.length} rows, on=${on.length} rows, " +
-          s"firstDiff=${off.zip(on).find(p => p._1 != p._2)}")
-    }
-  }
-
   test("dedup_cluster_lsh refines the exact clustering with pair recall >= 0.9") {
     def coClusteredPairs(labels: Map[Long, Long]): Set[(Long, Long)] =
       labels.groupBy(_._2).values.flatMap { members =>

@@ -732,9 +732,10 @@ class PlanShapeSpec extends SparkSpecBase {
 
   test("AQE skew-join splits the hot partition of an SMJ (round 13, SkewProbe twin)") {
     import org.apache.spark.sql.functions._
-    // Finding first (tools/SkewProbe, measured at 10x): OptimizeSkewedJoin
-    // fires only when BOTH SMJ children are Sort <- ShuffleQueryStage with
-    // ENSURE_REQUIREMENTS, and only past cluster-sized byte thresholds.
+    // Finding first (measured at 10x, BASELINE.md round-13 skew-join
+    // probe): OptimizeSkewedJoin fires only when BOTH SMJ children are
+    // Sort <- ShuffleQueryStage with ENSURE_REQUIREMENTS, and only past
+    // cluster-sized byte thresholds.
     // Here the thresholds are lowered to spec scale and the dim side is a
     // parquet round-trip (a .distinct() dim leaves a post-shuffle agg under
     // the Sort and DISABLES skew handling - pinned as part 2).
