@@ -1,4 +1,7 @@
 package graft
+
+import org.apache.spark.metrics.source.CodegenMetrics
+
 object Bench {
   /** Single-thread CPU calibration constant: the same VM measured 77 s /
     * 106 s / 135 s for near-identical catalogs across boots (host steal +
@@ -41,6 +44,18 @@ object Bench {
     // timed loop
     def secondsOf(body: => Unit): Double = {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
+    }
+    // codegen compiles (Spark's codegen cache misses) and JIT milliseconds
+    // of the warm passes and the timed loop, recorded in the full JSON
+    // ("codegen"): a timed loop that compiled generated classes again, or
+    // whose JIT had not settled, says so in its own artifact
+    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
+    val codegen = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def counted[T](phase: String)(body: => T): T = {
+      val c0 = compiles; val j0 = jit.getTotalCompilationTime
+      try body
+      finally codegen(phase) = (compiles - c0, jit.getTotalCompilationTime - j0)
     }
     val tablesS = secondsOf(Tables.names.foreach { n =>
       val df = Tables.load(spark, sfDir, n)
@@ -88,8 +103,14 @@ object Bench {
     // measured 2-3x its isolated time in two consecutive driver gate runs
     // at identical calib — in-JVM state, not host steal). Each entry's
     // whole-stage-codegen classes are compiled and JIT'd by one execution
-    // at sf0.001 (generated code is independent of the input directory),
-    // so the timed sf0.1 loop measures the operator, not C2 compilation.
+    // at sf0.001 (generated code is independent of the input directory,
+    // except where a plan choice such as the join strategy follows the
+    // input size). The timed sf0.1 loop reuses those classes only while
+    // Spark's codegen cache holds every class the pass compiled: the pass
+    // compiles ~3,100, and the cache is an LRU that GraftSession.builder
+    // sizes to 4096 (Spark's default, 100, evicts nearly all of them
+    // before the loop). "codegen" in the full JSON records the compiles
+    // of each phase, so a loop that recompiled shows it.
     // SPARK_GRAFT_BENCH_WARM=0 disables; SPARK_GRAFT_BENCH_WARMSF overrides
     // the warm-input directory.
     val warmSfDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMSF", "/root/testdata/sf0.001")
@@ -101,7 +122,7 @@ object Bench {
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
       .map(keys => SparkEntry.queries.view.filterKeys(keys).toMap)
       .getOrElse(selected)
-    val warmPassS = if (!warmPass) 0.0 else secondsOf {
+    val warmPassS = if (!warmPass) 0.0 else counted("warm_pass")(secondsOf {
       warmSelected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
         try fn(spark, warmSfDir).queryExecution.toRdd.count() // same codegen classes as the timed exec action
         catch { case e: Throwable =>
@@ -112,7 +133,7 @@ object Bench {
         }
       }
       System.gc()
-    }
+    })
     if (warmPass) System.err.println(f"[bench] warm pass (${warmSelected.size} " +
       f"entries @ $warmSfDir): $warmPassS%.1f s untimed")
     // Second, TARGETED JIT warm at the timed sfDir (r20 optimization round,
@@ -137,7 +158,7 @@ object Bench {
         "src_xml_extract,src_json_array")
       .split(',').map(_.trim).filter(_.nonEmpty).toSeq
       .filter(selected.contains)
-    val warmHotS = if (warmHot.isEmpty) 0.0 else secondsOf {
+    val warmHotS = if (warmHot.isEmpty) 0.0 else counted("warm_hot")(secondsOf {
       warmHot.foreach { name =>
         try selected(name)(spark, sfDir).queryExecution.toRdd.count()
         catch { case e: Throwable =>
@@ -148,7 +169,7 @@ object Bench {
         }
       }
       System.gc()
-    }
+    })
     if (warmHot.nonEmpty) System.err.println(f"[bench] warm-hot pass " +
       f"(${warmHot.size} entries @ $sfDir): $warmHotS%.1f s untimed")
     // fixed (sorted) execution order: hash-map order varied run to run,
@@ -205,7 +226,7 @@ object Bench {
       case _ => None
     }
     def cpuNanos: Long = osBean.map(_.getProcessCpuTime).getOrElse(0L)
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = counted("timed")(selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val gc0 = gcMillis; val cpu0 = cpuNanos
       val t0 = System.nanoTime()
       try fn(spark, sfDir).queryExecution.toRdd.count()
@@ -233,7 +254,7 @@ object Bench {
           leftover.map(i => s"${i.id}(${i.memSize}b)").mkString(", "))
       if (gcBetween) System.gc()
       (name, dt, gcDt, cpuDt)
-    }
+    })
     val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // the adjudicator maps ride the FULL-map artifact (outFile + early
@@ -249,7 +270,9 @@ object Bench {
     val phases = Seq("tables_s" -> tablesS, "staging_s" -> stagingS,
       "warm_pass_s" -> warmPassS, "warm_hot_s" -> warmHotS, "calib_s" -> calib)
       .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","calib_sec":$calib,"shared_warm":$sharedWarm,"warm_hot":"${warmHot.mkString(",")}","action":"exec","gc_sec":$gcMap,"cpu_sec":$cpuMap,"phases":$phases}"""
+    val codegenJson = codegen.map { case (k, (n, ms)) =>
+      s""""$k":{"compiles":$n,"jit_ms":$ms}""" }.mkString("{", ",", "}")
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","calib_sec":$calib,"shared_warm":$sharedWarm,"warm_hot":"${warmHot.mkString(",")}","action":"exec","gc_sec":$gcMap,"cpu_sec":$cpuMap,"phases":$phases,"codegen":$codegenJson}"""
     // The JSON travels three redundant ways (VERDICT.md r1 #5: the driver
     // parsed nothing from round 1's single println buried in sbt noise):
     // (1) a file the driver can read directly, (2) an early stdout line,

@@ -21,7 +21,7 @@ object Plans {
     // optional trailing keys: dump only those, EXECUTED first, so the
     // AQE-final plan (isFinalPlan=true, runtime join strategy) is shown
     val only = args.drop(2)
-    val cores = if (only.nonEmpty) 32 else 4
+    val cores = GraftSession.localCores
     val spark = GraftSession.builder(s"local[$cores]", cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder

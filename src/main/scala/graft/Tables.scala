@@ -138,7 +138,15 @@ object Tables {
   def documents(spark: SparkSession, sfDir: String): DataFrame  = load(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
 
-  /** Register every table as a temp view (for spark.sql-based operators). */
+  /** Register the named tables as temp views (for spark.sql-based
+    * operators). An entry names only the tables its SQL reads: each load
+    * plans a relation and, in a fresh session, infers or reads its schema,
+    * and loading `events` sets `spark.sql.legacy.parquet.nanosAsLong` on
+    * the session. */
+  def register(spark: SparkSession, sfDir: String, tables: String*): Unit =
+    tables.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
+
+  /** Register every table as a temp view. */
   def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
+    register(spark, sfDir, names: _*)
 }

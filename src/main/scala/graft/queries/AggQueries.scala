@@ -136,7 +136,7 @@ object AggQueries {
       |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
       |ORDER BY g_flag, g_status, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin) {
     (spark, sfDir) =>
-      Tables.registerAll(spark, sfDir)
+      Tables.register(spark, sfDir, "lineitem")
       spark.sql(
         """SELECT l_returnflag, l_linestatus,
           |       CAST(grouping(l_returnflag) AS INT) AS g_flag,

@@ -24,7 +24,7 @@ object SubqueryQueries {
       |WHERE CAST(o_totalprice AS DECIMAL(18,4)) >
       |      (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) / COUNT(*) AS DECIMAL(18,4)) FROM orders)
       |ORDER BY o_orderkey""".stripMargin) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
+    Tables.register(spark, sfDir, "orders")
     spark.sql(
       """SELECT o_orderkey, o_totalprice AS price
         |FROM orders
@@ -45,7 +45,7 @@ object SubqueryQueries {
       |              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
+    Tables.register(spark, sfDir, "orders", "lineitem")
     spark.sql(
       """SELECT o_orderpriority, COUNT(*) AS order_count
         |FROM orders
@@ -66,7 +66,7 @@ object SubqueryQueries {
       |FROM part
       |WHERE p_partkey IN (SELECT l_partkey FROM lineitem WHERE l_quantity > 45)
       |ORDER BY p_partkey""".stripMargin) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
+    Tables.register(spark, sfDir, "part", "lineitem")
     spark.sql(
       """SELECT p_partkey, p_name
         |FROM part
@@ -88,7 +88,7 @@ object SubqueryQueries {
       |        WHERE o.o_custkey = c.c_custkey) AS max_price
       |FROM customer c
       |ORDER BY c_custkey""".stripMargin) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
+    Tables.register(spark, sfDir, "customer", "orders")
     spark.sql(
       """SELECT c_custkey,
         |       (SELECT MAX(o_totalprice) FROM orders o
@@ -118,7 +118,7 @@ object SubqueryQueries {
       |  WHERE c_custkey IN (SELECT CASE WHEN o_totalprice > 400000 THEN NULL ELSE o_custkey END
       |                      FROM orders WHERE o_totalprice > 300000)
       |) t ORDER BY flavor, c_custkey""".stripMargin) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
+    Tables.register(spark, sfDir, "customer", "orders")
     spark.sql(
       """SELECT flavor, c_custkey FROM (
         |  SELECT 'clean_not_in' AS flavor, c_custkey FROM customer
@@ -158,7 +158,7 @@ object SubqueryQueries {
               |)
               |SELECT start, node, CAST(depth AS INTEGER) AS depth
               |FROM anc ORDER BY start, depth""".stripMargin) { (spark, sfDir) =>
-    Tables.registerAll(spark, sfDir)
+    Tables.register(spark, sfDir, "part")
     spark.sql(
       """WITH RECURSIVE anc AS (
         |  SELECT p_partkey AS start, p_partkey AS node, 0 AS depth

@@ -2,12 +2,17 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 
-/** Generated classes compile once per JVM, not once per session. Spark's
-  * codegen cache is keyed by class loader, and with per-session artifact
-  * isolation every `newSession()` child gets its own executor class loader,
-  * so each child would re-compile every class its plans generate. The
-  * engine's session builder turns the isolation off ([[GraftSession]]), and
-  * this spec pins both the setting and its effect. */
+/** Generated classes compile once per JVM, not once per session or per
+  * pass. Three settings of the engine's session builder ([[GraftSession]])
+  * make that hold, and this spec pins the settings and their effect:
+  *  - artifact isolation off: Spark's codegen cache is keyed by class
+  *    loader, and with per-session isolation every `newSession()` child
+  *    gets its own executor class loader;
+  *  - the codegen cache sized to 4096 classes: it is a JVM-wide LRU, and at
+  *    Spark's default of 100 one pass over a handful of entries evicts
+  *    classes the next pass needs;
+  *  - no stage id in generated class names: AQE numbers codegen stages in
+  *    a racy order, so the same plan could generate a different class. */
 class SessionReuseSpec extends SparkSpecBase {
 
   test("the engine's session builder turns artifact isolation off") {
@@ -16,18 +21,34 @@ class SessionReuseSpec extends SparkSpecBase {
       "a newSession() child does not inherit the setting")
   }
 
-  test("a second child session compiles no generated class") {
-    // compilations (codegen cache misses) while the entry runs in a fresh
-    // child session, builder included
+  test("the engine's session builder sizes the codegen cache and drops stage ids from class names") {
+    val child = spark.newSession()
+    Seq("spark.sql.codegen.cache.maxEntries" -> "4096",
+      "spark.sql.codegen.useIdInClassName" -> "false").foreach { case (k, v) =>
+      assert(spark.conf.get(k) == v, s"the shared session has $k=${spark.conf.get(k)}")
+      assert(child.conf.get(k) == v, s"a newSession() child has $k=${child.conf.get(k)}")
+    }
+  }
+
+  /** The benchmark's two workloads (perfbench/workloads.py): the nine
+    * `sql_etl` entries and the four `llm_dedup` entries. None is left out:
+    * none reads staged input (`stream_tumbling_agg` is a batch aggregate over
+    * `events`), and at the spec's scale all thirteen run in seconds. */
+  private val benchmarkEntries = Seq(
+    "src_scan_project", "scalar_case_when", "join_inner_equi",
+    "agg_pricing_summary", "win_topk_per_group", "sort_multi_limit",
+    "subq_in", "sink_partitioned_write", "stream_tumbling_agg",
+    "dedup_containment", "vec_cosine_knn", "vec_range_search", "vec_ivf_knn")
+
+  test("a second child session running the benchmark's entries compiles no generated class") {
+    // compilations (codegen cache misses) while the entries run in a fresh
+    // child session, builders included
     def compilationsInChild(): Long = {
       val child = spark.newSession()
-      // AQE numbers whole-stage codegen stages in the order their query
-      // stages are created, which races between sibling shuffles, and the
-      // number is part of the generated class name: without this the same
-      // plan can miss the cache on stage numbering alone
-      child.conf.set("spark.sql.codegen.useIdInClassName", "false")
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      Catalog.byKey("dedup_containment").run(child, sfDir).queryExecution.toRdd.count()
+      benchmarkEntries.foreach { key =>
+        Catalog.byKey(key).run(child, sfDir).queryExecution.toRdd.count()
+      }
       CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
     }
     val first = compilationsInChild()
