@@ -30,6 +30,24 @@ class SessionReuseSpec extends SparkSpecBase {
     }
   }
 
+  /** Compilations (codegen cache misses) while `keys` run in a fresh child
+    * session, builders included. */
+  private def compilationsInChild(keys: Seq[String]): Long = {
+    val child = spark.newSession()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    keys.foreach { key =>
+      Catalog.byKey(key).run(child, sfDir).queryExecution.toRdd.count()
+    }
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  test("a second child session compiles no generated class") {
+    val first = compilationsInChild(Seq("dedup_containment"))
+    val second = compilationsInChild(Seq("dedup_containment"))
+    assert(second == 0,
+      s"the second child compiled $second classes (the first compiled $first)")
+  }
+
   /** The benchmark's two workloads (perfbench/workloads.py): the nine
     * `sql_etl` entries and the four `llm_dedup` entries. None is left out:
     * none reads staged input (`stream_tumbling_agg` is a batch aggregate over
@@ -41,18 +59,8 @@ class SessionReuseSpec extends SparkSpecBase {
     "dedup_containment", "vec_cosine_knn", "vec_range_search", "vec_ivf_knn")
 
   test("a second child session running the benchmark's entries compiles no generated class") {
-    // compilations (codegen cache misses) while the entries run in a fresh
-    // child session, builders included
-    def compilationsInChild(): Long = {
-      val child = spark.newSession()
-      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      benchmarkEntries.foreach { key =>
-        Catalog.byKey(key).run(child, sfDir).queryExecution.toRdd.count()
-      }
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-    }
-    val first = compilationsInChild()
-    val second = compilationsInChild()
+    val first = compilationsInChild(benchmarkEntries)
+    val second = compilationsInChild(benchmarkEntries)
     assert(second == 0,
       s"the second child compiled $second classes (the first compiled $first)")
   }
