@@ -116,14 +116,8 @@ object Bench {
     val warmSfDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMSF", "/root/testdata/sf0.001")
     val warmPass = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "1") != "0" &&
       new java.io.File(warmSfDir).isDirectory && warmSfDir != sfDir
-    // SPARK_GRAFT_BENCH_WARMONLY=k1,k2 warms a DIFFERENT subset than the
-    // timed selection (diagnosis lever for warm-residue effects)
-    val warmSelected = sys.env.get("SPARK_GRAFT_BENCH_WARMONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .map(keys => SparkEntry.queries.view.filterKeys(keys).toMap)
-      .getOrElse(selected)
     val warmPassS = if (!warmPass) 0.0 else counted("warm_pass")(secondsOf {
-      warmSelected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
         try fn(spark, warmSfDir).queryExecution.toRdd.count() // same codegen classes as the timed exec action
         catch { case e: Throwable =>
           System.err.println(s"[bench] warm $name failed (continuing): $e")
@@ -134,7 +128,7 @@ object Bench {
       }
       System.gc()
     })
-    if (warmPass) System.err.println(f"[bench] warm pass (${warmSelected.size} " +
+    if (warmPass) System.err.println(f"[bench] warm pass (${selected.size} " +
       f"entries @ $warmSfDir): $warmPassS%.1f s untimed")
     // Second, TARGETED JIT warm at the timed sfDir (r20 optimization round,
     // drift-mode root cause): entries whose hot path is a deep SHARED-

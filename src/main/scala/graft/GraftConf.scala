@@ -47,12 +47,6 @@ object GraftConf {
     v
   }
 
-  /** Shared-frame memos (graph edge frames, vector index artifacts,
-    * Tables.load): pure perf caches over immutable inputs — results are
-    * identical either way; off only for memory-starved diagnostics. */
-  def graphMemo(spark: SparkSession): Boolean =
-    get(spark, "graft.graph.memo", "true").toBoolean
-
   /** Storage level for the graph family's cached frames (the shared edge
     * memos and the entry-local degree / oriented-edge / top-k-neighbor
     * frames). Default MEMORY_AND_DISK_SER — the r18 posture experiment

@@ -31,38 +31,25 @@ object Tables {
     * construction, so every derived timestamp (window bounds, date_trunc,
     * lag) stays naive end-to-end and matches DuckDB's reading.
     */
-  /** Memoized relation per (session, sfDir, table) — fixed-overhead
-    * control (VERDICT r12 #3). Every catalog entry used to rebuild its
-    * source DataFrames from `spark.read.parquet`, re-paying file listing,
-    * footer schema read, and analysis for the SAME immutable input on
-    * every invocation; across the 274-entry bench that re-planning is
-    * pure per-action floor. DataFrames are immutable and reusable across
+  /** The base-table relation, memoized per (session, sfDir, table,
+    * scan-parallelism floor) in [[SessionMemo]] — fixed-overhead control
+    * (VERDICT r12 #3). Every catalog entry used to rebuild its source
+    * DataFrames from `spark.read.parquet`, re-paying file listing, footer
+    * schema read, and analysis for the SAME immutable input on every
+    * invocation; across the 274-entry bench that re-planning is pure
+    * per-action floor. DataFrames are immutable and reusable across
     * queries within a session, so handing every caller the same analyzed
     * relation changes no semantics (the testdata dirs never mutate
-    * mid-session). `graft.tables.memo=false` restores the old behavior
-    * (the r14 floor A/B lever, BASELINE.md round-16). Stopped sessions
-    * are evicted on lookup, same pattern as the other driver-side memos. */
-  private val loadCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String, Int), DataFrame]()
-
+    * mid-session). The build caches nothing, so the memo owns no frame
+    * here: a caller's own `.cache()` of the relation survives a memo
+    * reset. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // scan-parallelism floor (r20 optimization round — rationale and the
     // scale-adaptivity argument live on GraftConf.tablesMinParallelism);
     // resolved here so the memo key carries the posture and an A/B flip
     // of the conf mid-session can never serve the other posture's frame
     val minP = GraftConf.tablesMinParallelism(spark)
-    if (spark.conf.get("graft.tables.memo", "true").toBoolean) {
-      loadCache.keySet.removeIf(_._1.sparkContext.isStopped)
-      // Stopped-context eviction alone is not enough in a long-lived JVM
-      // that churns spark.newSession() children off ONE context (tests,
-      // servers): those sessions never stop a context, so their entries
-      // would accumulate unboundedly. The memo is a pure perf cache, so a
-      // size bound with full reset is the simplest safe policy — a clear
-      // costs one re-listing per live (session, sfDir, table), nothing else.
-      if (loadCache.size > 512) loadCache.clear()
-      loadCache.computeIfAbsent((spark, sfDir, name, minP),
-        _ => doLoad(spark, sfDir, name, minP))
-    } else doLoad(spark, sfDir, name, minP)
+    SessionMemo(spark, ("load", sfDir, name, minP)) { _ => doLoad(spark, sfDir, name, minP) }
   }
 
   private def doLoad(spark: SparkSession, sfDir: String, name: String,
@@ -78,7 +65,7 @@ object Tables {
   }
 
   /** Parquet schemas inferred once per table state and handed to every
-    * later read, across sessions. [[loadCache]] is per session, so each new
+    * later read, across sessions. [[load]]'s memo is per session, so each new
     * session's `spark.read.parquet` would otherwise run a footer-inference
     * Spark job per table; this pays off where many sessions share one JVM.
     * The key is the path plus the length and modification time of the
@@ -102,7 +89,7 @@ object Tables {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None => // infer once, through the read the caller gets
         val df = spark.read.parquet(path)
-        if (schemaCache.size > 512) schemaCache.clear() // same bound as loadCache
+        if (schemaCache.size > 512) schemaCache.clear()
         schemaCache.put(key, df.schema)
         df
     }

@@ -23,45 +23,18 @@ object GraphQueries {
     * co-occurrence self-join (triangle needs the distinct pairs, jaccard
     * the pair weights — one weighted groupBy serves both, since its key
     * set IS the distinct pair set). A per-(session, sfDir) memo of these
-    * two frames is the materialized-view posture a warehouse takes for
-    * hot derived frames: build once at load, every query starts from it.
-    * Same shape as Tables.load's memo — a pure perf cache over immutable
-    * inputs (deterministic either way), bounded, conf-gated.
-    * label_prop's sparsified pairs filter PRE-aggregation on l_orderkey,
-    * which the weighted frame no longer carries — it stays per-entry. */
-  private val edgeCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String, String),
-      org.apache.spark.sql.DataFrame]
-
+    * two frames ([[graft.SessionMemo]], which owns and unpersists the
+    * persisted frame) is the materialized-view posture a warehouse takes
+    * for hot derived frames: build once at load, every query starts from
+    * it. label_prop's sparsified pairs filter PRE-aggregation on
+    * l_orderkey, which the weighted frame no longer carries — it stays
+    * per-entry. */
   private def memo(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                    kind: String)(build: => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
-    if (graft.GraftConf.graphMemo(spark)) {
-      edgeCache.keySet.removeIf(_._1.sparkContext.isStopped)
-      // bound-with-reset must also release the cached blocks: dropping the
-      // map entry alone leaves the InMemoryRelation resident until the
-      // context stops — exactly the memory the bound exists to free
-      // evict entry-by-entry via the iterator (not forEach + clear()):
-      // clear() would also drop entries inserted concurrently between the
-      // sweep and the clear WITHOUT unpersisting them — leaked blocks until
-      // the context stops. Iterator removal only drops what was unpersisted.
-      if (edgeCache.size > 256) {
-        val it = edgeCache.entrySet().iterator()
-        while (it.hasNext) {
-          val df = it.next().getValue
-          if (!df.sparkSession.sparkContext.isStopped) df.unpersist(false)
-          it.remove()
-        }
-      }
-      edgeCache.computeIfAbsent((spark, sfDir, kind),
-        _ => build.persist(graft.GraftConf.graphStorageLevel(spark)))
-    } else
-      // memo off (memory-starved diagnostics mode): return UNCACHED — a
-      // per-call .cache() with no owner to unpersist it would accumulate a
-      // fresh cached frame per invocation, defeating the knob's purpose.
-      // Entries that reuse the frame within one query pay the rebuild.
-      build
+    graft.SessionMemo(spark, ("graph", sfDir, kind)) { own =>
+      own(build.persist(graft.GraftConf.graphStorageLevel(spark)))
+    }
 
   /** Undirected-as-directed txn edge set (2·custkey / 2·suppkey+1 ids),
     * one row per distinct trading pair — pagerank + degree_stats. */

@@ -543,8 +543,9 @@ object ScanQueries {
     * already resolved — its per-session relation cache then points at
     * part-files the rewrite deleted (FILE_NOT_EXIST; hit by
     * PerturbationSpec's sibling-session run). One staging per (JVM, sfDir)
-    * is both the fastest and the only cache-coherent choice; the staging
-    * session refreshes its own relation cache after a rewrite. */
+    * is both the fastest and the only cache-coherent choice (which is why
+    * the staged sets are JVM-scoped and not in [[graft.SessionMemo]]); the
+    * staging session refreshes its own relation cache after a rewrite. */
   private val bucketedStaged = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   private def ensureBucketedTables(spark: org.apache.spark.sql.SparkSession,
@@ -555,22 +556,25 @@ object ScanQueries {
     if (!(bucketedStaged.contains(sfDir) && tablesExist)) bucketedStaged.synchronized {
       if (!bucketedStaged.contains(sfDir) || !tablesExist) {
         val base = scratchDir("bucketed", sfDir)
-        val basePath = new org.apache.hadoop.fs.Path(base)
-        val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val marker = new org.apache.hadoop.fs.Path(basePath, "_staged_for")
-        // marker records which sfDir the on-disk bucketed files were built
-        // from, written only AFTER both writes complete: a fresh JVM (the
-        // driver's per-round Bench) re-registers valid files with DDL only
-        // instead of re-paying the two table writes
-        val diskValid = fs.exists(marker) && {
-          val in = fs.open(marker)
-          val staged = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-          staged == sfDir &&
-            fs.exists(new org.apache.hadoop.fs.Path(basePath, "orders")) &&
-            fs.exists(new org.apache.hadoop.fs.Path(basePath, "customer"))
+        val onDisk = stagedOnDisk(spark, base, sfDir, "orders", "customer") {
+          spark.sql("DROP TABLE IF EXISTS graft_orders_bkt")
+          spark.sql("DROP TABLE IF EXISTS graft_customer_bkt")
+          Tables.orders(spark, sfDir)
+            .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+            .write.mode("overwrite")
+            .option("path", s"$base/orders")
+            .bucketBy(8, "o_custkey").sortBy("o_custkey")
+            .saveAsTable("graft_orders_bkt")
+          Tables.customer(spark, sfDir)
+            .select(col("c_custkey"), col("c_mktsegment"))
+            .write.mode("overwrite")
+            .option("path", s"$base/customer")
+            .bucketBy(8, "c_custkey").sortBy("c_custkey")
+            .saveAsTable("graft_customer_bkt")
         }
-        if (diskValid) {
+        // valid files from an earlier JVM: re-register them with DDL only
+        // instead of re-paying the two table writes
+        if (onDisk) {
           val ordersDDL = Tables.orders(spark, sfDir)
             .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
             .schema.toDDL
@@ -587,24 +591,6 @@ object ScanQueries {
                |USING PARQUET
                |CLUSTERED BY (c_custkey) SORTED BY (c_custkey) INTO 8 BUCKETS
                |LOCATION '$base/customer'""".stripMargin)
-        } else {
-          if (fs.exists(marker)) fs.delete(marker, false)
-          spark.sql("DROP TABLE IF EXISTS graft_orders_bkt")
-          spark.sql("DROP TABLE IF EXISTS graft_customer_bkt")
-          Tables.orders(spark, sfDir)
-            .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-            .write.mode("overwrite")
-            .option("path", s"$base/orders")
-            .bucketBy(8, "o_custkey").sortBy("o_custkey")
-            .saveAsTable("graft_orders_bkt")
-          Tables.customer(spark, sfDir)
-            .select(col("c_custkey"), col("c_mktsegment"))
-            .write.mode("overwrite")
-            .option("path", s"$base/customer")
-            .bucketBy(8, "c_custkey").sortBy("c_custkey")
-            .saveAsTable("graft_customer_bkt")
-          val out = fs.create(marker, true)
-          try out.write(sfDir.getBytes("UTF-8")) finally out.close()
         }
         spark.catalog.refreshTable("graft_orders_bkt")
         spark.catalog.refreshTable("graft_customer_bkt")
@@ -730,17 +716,7 @@ object ScanQueries {
     val base = scratchDir("zorder_sink", sfDir)
     if (!zorderStaged.contains(sfDir)) zorderStaged.synchronized {
       if (!zorderStaged.contains(sfDir)) {
-        val basePath = new org.apache.hadoop.fs.Path(base)
-        val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val marker = new org.apache.hadoop.fs.Path(basePath, "_staged_for")
-        val diskValid = fs.exists(marker) && {
-          val in = fs.open(marker)
-          val staged = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-          staged == sfDir && fs.exists(new org.apache.hadoop.fs.Path(basePath, "data"))
-        }
-        if (!diskValid) {
-          if (fs.exists(basePath)) fs.delete(basePath, true)
+        stagedOnDisk(spark, base, sfDir, "data") {
           withZKey(
             Tables.lineitem(spark, sfDir)
               .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
@@ -750,8 +726,6 @@ object ScanQueries {
             .sortWithinPartitions(col("zkey"))
             .drop("zkey")
             .write.mode("overwrite").parquet(s"$base/data")
-          val out = fs.create(marker, true)
-          try out.write(sfDir.getBytes("UTF-8")) finally out.close()
         }
         zorderStaged.clear()
         zorderStaged.add(sfDir)

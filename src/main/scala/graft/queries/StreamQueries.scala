@@ -182,20 +182,33 @@ object StreamQueries {
     }
   }
 
+  /** A fresh, empty directory for one stream run's sink, checkpoint or
+    * target: `name` suffixed by the sanitized `key` (an sfDir or a path
+    * derived from one), so concurrent runs at different scale factors never
+    * share one, under a per-JVM root named by the application id, so two
+    * JVMs running the same sfDir never share a sink or a state store (a
+    * shared checkpoint fails the other JVM's query with
+    * STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY). The root is deleted at JVM
+    * exit, so per-JVM directories do not pile up in tmp. Fresh on every run
+    * — a stale sink would accumulate duplicate appends once its checkpoint
+    * is gone. */
+  private def runDir(spark: SparkSession, name: String, key: String): String = {
+    val root = new org.apache.hadoop.fs.Path(
+      s"${sys.props("java.io.tmpdir")}/graft_stream_${spark.sparkContext.applicationId}")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(root)
+    fs.deleteOnExit(root)
+    val dir = new org.apache.hadoop.fs.Path(root, s"${name}_${key.replaceAll("[^A-Za-z0-9]", "_")}")
+    fs.delete(dir, true)
+    dir.toString
+  }
+
   private def runStream(spark: SparkSession, name: String, src: String,
       skipNoDataBatch: Boolean = false)(
       transform: DataFrame => DataFrame): DataFrame =
     withStreamingConf(spark, skipNoDataBatch) {
-    // suffix by the (already sfDir-derived) source path: concurrent runs at
-    // different scale factors must not share a sink or checkpoint
-    val sfx = src.replaceAll("[^A-Za-z0-9]", "_")
-    val sink = s"${sys.props("java.io.tmpdir")}/graft_stream_sink_${name}_$sfx"
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_stream_ckpt_${name}_$sfx"
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    // fresh checkpoint AND sink every run — a stale sink would accumulate
-    // duplicate appends once its checkpoint is gone
-    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    fs.delete(new org.apache.hadoop.fs.Path(sink), true)
+    val sink = runDir(spark, s"sink_$name", src)
+    val ckpt = runDir(spark, s"ckpt_$name", src)
     val in = spark.readStream.schema(eventsSchema).parquet(src)
     val q = transform(in).writeStream
       .format("parquet").option("path", sink).option("checkpointLocation", ckpt)
@@ -239,11 +252,9 @@ object StreamQueries {
   private val foreachBatchUpsert = CatalogEntry.noOracle("stream_foreachbatch_upsert") {
     (spark, sfDir) => withStreamingConf(spark, skipNoDataBatch = false) {
       val src = stageSource(spark, sfDir)
-      val target = Util.scratchDir("stream_target_upsert", sfDir)
-      val ckpt = Util.scratchDir("stream_ckpt_upsert", sfDir)
+      val target = runDir(spark, "target_upsert", sfDir)
+      val ckpt = runDir(spark, "ckpt_upsert", sfDir)
       val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-      fs.delete(new org.apache.hadoop.fs.Path(target), true)
       val in = spark.readStream.schema(eventsSchema).parquet(src)
       val q = in.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
         val incoming = batch.groupBy(col("user_id"))
@@ -333,11 +344,8 @@ object StreamQueries {
       import spark.implicits._
       import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
       val src = stageSource(spark, sfDir)
-      val sink = Util.scratchDir("stream_sink_stateful", sfDir)
-      val ckpt = Util.scratchDir("stream_ckpt_stateful", sfDir)
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-      fs.delete(new org.apache.hadoop.fs.Path(sink), true)
+      val sink = runDir(spark, "sink_stateful", sfDir)
+      val ckpt = runDir(spark, "ckpt_stateful", sfDir)
       val in = spark.readStream.schema(eventsSchema).parquet(src)
         .select(col("user_id"), col("event_id"), col("ts"))
       val gapMicros = 1800000000L
@@ -450,11 +458,8 @@ object StreamQueries {
     """SELECT event_id, user_id, event_type, value
       |FROM events ORDER BY event_id""".stripMargin) { (spark, sfDir) =>
     withStreamingConf(spark, skipNoDataBatch = true) {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_stream_resume_" +
-        sfDir.replaceAll("[^A-Za-z0-9]", "_")
+      val base = runDir(spark, "resume", sfDir)
       val src = s"$base/src"; val sink = s"$base/sink"; val ckpt = s"$base/ckpt"
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
       val ev = Tables.events(spark, sfDir)
       def runOnce(): Unit = {
         val in = spark.readStream.schema(eventsSchema).parquet(src)
@@ -500,11 +505,9 @@ object StreamQueries {
               |ORDER BY win_start""".stripMargin) { (spark, sfDir) =>
     withStreamingConf(spark, skipNoDataBatch = true) {
       val src = stageSource(spark, sfDir)
-      val target = Util.scratchDir("stream_target_rocks", sfDir)
-      val ckpt = Util.scratchDir("stream_ckpt_rocks", sfDir)
+      val target = runDir(spark, "target_rocks", sfDir)
+      val ckpt = runDir(spark, "ckpt_rocks", sfDir)
       val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-      fs.delete(new org.apache.hadoop.fs.Path(target), true)
       val providerKey = "spark.sql.streaming.stateStore.providerClass"
       val prev = spark.conf.getOption(providerKey)
       spark.conf.set(providerKey,
@@ -591,12 +594,8 @@ object StreamQueries {
       import spark.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       val src = stageSource(spark, sfDir)
-      val sfx = src.replaceAll("[^A-Za-z0-9]", "_")
-      val sink = s"${sys.props("java.io.tmpdir")}/graft_stream_sink_tws_$sfx"
-      val ckpt = s"${sys.props("java.io.tmpdir")}/graft_stream_ckpt_tws_$sfx"
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-      fs.delete(new org.apache.hadoop.fs.Path(sink), true)
+      val sink = runDir(spark, "sink_tws", src)
+      val ckpt = runDir(spark, "ckpt_tws", src)
       val providerKey = "spark.sql.streaming.stateStore.providerClass"
       val prev = spark.conf.getOption(providerKey)
       spark.conf.set(providerKey,

@@ -226,46 +226,24 @@ object TextQueries {
     * integer results. Returns None above 64 tokens or when
     * `graft.text.tokenBitmask=off`; callers then run their sorted-array
     * general path (BitmaskPathSpec pins the two paths output-equal). */
-  /** Per-(session, sfDir) memo of the two r19 encode frames (ADVICE r19):
-    * dedup_containment and text_jaccard_tokens both consume [[tokenMasks]]
-    * and each call previously re-built the cached frame AND re-ran its
-    * eager vocab-count stats job. The encode is a pure function of the
-    * immutable corpus, so one copy per (session, sfDir, kind) is sound —
-    * same bounded-map posture as GraphQueries.memo. The conf knob is
-    * checked BEFORE the lookup (an "off" call never reads or writes the
+  /** Per-(session, sfDir) memo of the two r19 encode frames (ADVICE r19),
+    * in [[graft.SessionMemo]]: dedup_containment and text_jaccard_tokens
+    * both consume [[tokenMasks]] and each call previously re-built the
+    * cached frame AND re-ran its eager vocab-count stats job. The encode is
+    * a pure function of the immutable corpus, so one copy per (session,
+    * sfDir, kind) is sound; the build owns its cached frame. The conf knob
+    * is checked BEFORE the lookup (an "off" call never reads or writes the
     * memo), so BitmaskPathSpec's auto/off flips still exercise both
     * physical paths. `None` results (vocab over the bound) are memoized
     * too: the bound decision is itself a pure function of the corpus, and
     * re-counting to re-learn "too big" is exactly the duplicate stats job
     * the memo exists to skip. */
-  private val encodeCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String, String),
-      Option[org.apache.spark.sql.DataFrame]]
-
-  private def memoEncode(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, kind: String)(
-      build: => Option[org.apache.spark.sql.DataFrame])
-      : Option[org.apache.spark.sql.DataFrame] = {
-    encodeCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    // bound-with-reset releases cached blocks via iterator removal, same
-    // rationale as GraphQueries.memo's eviction
-    if (encodeCache.size > 256) {
-      val it = encodeCache.entrySet().iterator()
-      while (it.hasNext) {
-        it.next().getValue.foreach { df =>
-          if (!df.sparkSession.sparkContext.isStopped) df.unpersist(false)
-        }
-        it.remove()
-      }
-    }
-    encodeCache.computeIfAbsent((spark, sfDir, kind), _ => build)
-  }
-
   private def tokenMasks(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): Option[org.apache.spark.sql.DataFrame] = {
     if (!graft.GraftConf.tokenBitmask(spark)) return None
-    memoEncode(spark, sfDir, "mask") { tokenMasksBuild(spark, sfDir) }
+    graft.SessionMemo(spark, ("encode", sfDir, "mask")) { own =>
+      tokenMasksBuild(spark, sfDir).map(own)
+    }
   }
 
   private def tokenMasksBuild(spark: org.apache.spark.sql.SparkSession,
@@ -281,11 +259,10 @@ object TextQueries {
       .mapPartitions(_.distinct.take(65)).collect().distinct.sorted
     if (vocab.length > 64) return None
     val dict = vocab.toSeq.zipWithIndex.toDF("t", "bid")
-    // cached: every consumer reads the frame at least twice (both sides of
-    // a pair join, or the rep groupBy plus the doc join-back) — uncached,
-    // the explode+dictionary-join+groupBy encoding runs once per reference.
-    // Harness sweep owns the unpersist (same convention as the
-    // containment-prefix posting frame).
+    // cached (the memo owns it): every consumer reads the frame at least
+    // twice (both sides of a pair join, or the rep groupBy plus the doc
+    // join-back) — uncached, the explode+dictionary-join+groupBy encoding
+    // runs once per reference.
     // explode_OUTER + left dict join: a null-text doc keeps its row with
     // a NULL mask (bit_or over the single null bid), exactly mirroring
     // the general path's NULL toks — consumers' null semantics (NULL
@@ -863,7 +840,9 @@ object TextQueries {
   private def gramIds(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): Option[org.apache.spark.sql.DataFrame] = {
     if (!graft.GraftConf.gramDict(spark)) return None
-    memoEncode(spark, sfDir, "gram") { gramIdsBuild(spark, sfDir) }
+    graft.SessionMemo(spark, ("encode", sfDir, "gram")) { own =>
+      gramIdsBuild(spark, sfDir).map(own)
+    }
   }
 
   private def gramIdsBuild(spark: org.apache.spark.sql.SparkSession,
@@ -2844,27 +2823,19 @@ object TextQueries {
        |    THEN concat(slice(acc, 1, size(acc) - 1), array('${esc(m)}'))
        |    ELSE concat(acc, array(s)) END)""".stripMargin
 
-  /** Train-once memo for the BPE merge table, the [[graft.queries]] analog
-    * of VectorQueries' pqModels cache: the trainer is deterministic and
-    * partition-invariant (BpeSpec + PerturbationSpec), so sharing the
-    * learned merges between `pipeline_bpe_train` and `pipeline_bpe_apply`
-    * within one session changes nothing but the second entry's cost.
-    * Session-reference-keyed; stopped sessions evicted on lookup. */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, Int),
-    Seq[(Long, String, String, String, Long)]]()
-
   /** The greedy merge-learning loop shared by `pipeline_bpe_train` (which
     * emits the merge table) and `pipeline_bpe_apply` (which tokenizes with
-    * it — deterministic trainer, so the two entries always agree). */
+    * it — deterministic trainer, so the two entries always agree). Trained
+    * once per (session, sfDir, nMerges) in [[graft.SessionMemo]]: the
+    * trainer is deterministic and partition-invariant (BpeSpec +
+    * PerturbationSpec), so sharing the learned merges between the two
+    * entries within one session changes nothing but the second entry's
+    * cost. */
   private def trainBpe(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      nMerges: Int = 10): Seq[(Long, String, String, String, Long)] = {
-    bpeCache.forEach { (k, _) =>
-      if (k._1.sparkContext.isStopped) bpeCache.remove(k)
+      nMerges: Int = 10): Seq[(Long, String, String, String, Long)] =
+    graft.SessionMemo(spark, ("bpe", sfDir, nMerges)) { _ =>
+      trainBpeUncached(spark, sfDir, nMerges)
     }
-    bpeCache.computeIfAbsent((spark, sfDir, nMerges), _ =>
-      trainBpeUncached(spark, sfDir, nMerges))
-  }
 
   private def trainBpeUncached(spark: org.apache.spark.sql.SparkSession, sfDir: String,
       nMerges: Int): Seq[(Long, String, String, String, Long)] = {

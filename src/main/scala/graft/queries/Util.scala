@@ -50,6 +50,33 @@ object Util {
     s"${sys.props("java.io.tmpdir")}/graft_${name}_" +
       sfDir.replaceAll("[^A-Za-z0-9]", "_")
 
+  /** Write-once staging under `base`: a `_staged_for` marker records which
+    * sfDir the staged files were built from and is written only AFTER
+    * `stage` completes, so a fresh JVM (the driver's per-round Bench) finds
+    * valid files — the marker names this sfDir and every one of `parts`
+    * exists under `base` — and skips the writes. Otherwise the stale marker
+    * is deleted first and `stage` runs. Returns true when the files on disk
+    * were already valid (nothing was written). */
+  def stagedOnDisk(spark: org.apache.spark.sql.SparkSession, base: String,
+      sfDir: String, parts: String*)(stage: => Unit): Boolean = {
+    val basePath = new org.apache.hadoop.fs.Path(base)
+    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = new org.apache.hadoop.fs.Path(basePath, "_staged_for")
+    val valid = fs.exists(marker) && {
+      val in = fs.open(marker)
+      val staged = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+      finally in.close()
+      staged == sfDir && parts.forall(p => fs.exists(new org.apache.hadoop.fs.Path(basePath, p)))
+    }
+    if (!valid) {
+      if (fs.exists(marker)) fs.delete(marker, false)
+      stage
+      val out = fs.create(marker, true)
+      try out.write(sfDir.getBytes("UTF-8")) finally out.close()
+    }
+    valid
+  }
+
   /** Entry-cache sweep: query bodies `.cache()` intermediates (LSH
     * canonicalization, PQ codebooks, edge lists…) that are correct within
     * one query but must not accumulate across a catalog-wide run — by the
