@@ -103,62 +103,6 @@ object GraftConf {
     * quadratically. An ABSOLUTE count on purpose — at any corpus size a
     * bucket this large carries no similarity signal, while the quadratic
     * cost of joining it grows without bound. */
-  /** r19 adaptive physical path for the token-set pair entries
-    * (dedup_containment, text_jaccard_tokens): when the corpus' GLOBAL
-    * distinct-token count is ≤ 64 — counted from the data, one scalar
-    * stats job, the same statistics-driven plan choice a CBO makes — each
-    * doc's distinct token set is encoded as an exact 64-bit bitmask over
-    * a data-derived dictionary (no hashing, a bijection), and the
-    * per-pair |A∩B| collapses from a sorted-merge over string arrays to
-    * ONE bit_count(mask_a & mask_b). Outputs are bit-identical to the
-    * sorted-array spelling by construction (both compute the same integer
-    * set sizes); the array spelling remains the >64-vocab general path
-    * and the BitmaskPathSpec pins the two paths equal. "auto" (default)
-    * picks by the counted vocab; "off" pins the general path (also the
-    * 100-TB default posture, where the vocab-count job over raw text is
-    * itself a full scan you may not want to pay twice). */
-  def tokenBitmask(spark: SparkSession): Boolean = {
-    val v = get(spark, "graft.text.tokenBitmask", "auto")
-    require(v == "auto" || v == "off",
-      s"graft.text.tokenBitmask=$v invalid: auto|off")
-    v == "auto"
-  }
-
-  /** Companion adaptive path for the BIGRAM pair entry
-    * (dedup_ngram_jaccard), where the shingle vocabulary outgrows 64 bits
-    * (31-token corpus ⇒ ≤961 observed bigrams) but stays broadcastable:
-    * when the counted distinct-bigram vocabulary is ≤ 2^16, bigrams ride
-    * as dictionary-assigned ARRAY<BIGINT> ids (a bijection — row_number
-    * over the sorted distinct bigrams, no hashing) and the per-pair
-    * intersect is the primitive-long sorted merge
-    * (`sorted_intersect_size_l`) over 8 B/element arrays instead of the
-    * UTF8String merge over ~11 B string elements. Same exactness posture
-    * as tokenBitmask (BitmaskPathSpec pins path equality); "off" pins the
-    * general string path. */
-  def gramDict(spark: SparkSession): Boolean = {
-    val v = get(spark, "graft.text.gramDict", "auto")
-    require(v == "auto" || v == "off", s"graft.text.gramDict=$v invalid: auto|off")
-    v == "auto"
-  }
-
-  /** r20 adaptive verify encoding for dedup_containment_prefix (VERDICT
-    * r19 #4): when the REP-LEVEL (lang, token) vocabulary is ≤ 2^16
-    * (counted — one scalar stats job), the exact-verify stage compares
-    * dictionary-assigned sorted ARRAY<BIGINT> ids instead of the raw
-    * string token arrays: the candidate join-back shuffles fixed 8 B
-    * elements and the per-candidate intersect is the primitive-long
-    * sorted merge. The dictionary is a bijection over the observed
-    * (lang, token) pairs (row_number, no hashing), so intersect sizes —
-    * and therefore the has_container decisions — are identical to the
-    * string spelling; PropertySpec's recall floors and the twin contract
-    * are unchanged. "off" pins the string verify (the 100-TB posture when
-    * the vocabulary outgrows the broadcast bound anyway). */
-  def prefixDict(spark: SparkSession): Boolean = {
-    val v = get(spark, "graft.text.prefixDict", "auto")
-    require(v == "auto" || v == "off", s"graft.text.prefixDict=$v invalid: auto|off")
-    v == "auto"
-  }
-
   def verifyMaxBucket(spark: SparkSession): Int = {
     val v = get(spark, "graft.dedup.verify.maxBucket", "64").toInt
     require(v >= 2, s"graft.dedup.verify.maxBucket=$v invalid: must be >= 2")

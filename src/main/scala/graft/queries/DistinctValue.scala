@@ -22,6 +22,14 @@ import org.apache.spark.sql.functions._
   * entries MUST build on these helpers; `CliffCanarySpec` runs every
   * banded catalog entry against a clique-heavy fixture and fails the
   * build if a doc-level pairing reappears.
+  *
+  * The LSH banding mechanisms these helpers pair up with are each written
+  * once too: MinHash signatures and band keys
+  * (`TextQueries.minhashSignature`, `TextQueries.minhashBands`), the full
+  * within-bucket expansion (`TextQueries.bucketPairs`), the linear chain
+  * candidates (`TextQueries.chainNeighbours`), the rep-space cluster tail
+  * (`TextQueries.repClusters`) and the SRP hyperplane tables
+  * (`VectorQueries.srpTables`).
   */
 object DistinctValue {
 

@@ -94,9 +94,6 @@ object TextQueries {
                     minSizeRatio: Double = 0.0): org.apache.spark.sql.DataFrame = {
     require(bands >= 1 && nHashes % bands == 0,
       s"bands=$bands must divide nHashes=$nHashes")
-    val rowsPerBand = nHashes / bands
-    val minExprs = (0 until nHashes).map(i =>
-      min(xxhash64(lit(i), col("s"))).as(s"h$i"))
     // n_sh (shingle-set size; the input sets are distinct) funds the
     // optional length-ratio prune at the bucket join: when the caller
     // verifies with Jaccard ≥ t, jaccard(A,B) ≤ min(|A|,|B|)/max(|A|,|B|)
@@ -104,28 +101,89 @@ object TextQueries {
     // codegen'd long comparison before it costs a pair row + exact verify.
     // Callers whose verify is NOT a Jaccard threshold (e.g. edit distance)
     // pass 0.0 (no prune).
-    val sig = shingled.select(col(idCol).as("id"), explode(col(shingleCol)).as("s"))
-      .groupBy(col("id")).agg(minExprs.head, (minExprs.tail :+ count(lit(1)).as("n_sh")): _*)
+    val sig = minhashSignature(shingled, idCol, shingleCol, nHashes, Some("n_sh"))
     // cached: the bucket-size window + both self-join legs read this frame;
     // without the cache the explode+agg signature pass runs twice.
-    val banded = sig.select(
-      col("id"), col("n_sh"),
-      posexplode(array((0 until bands).map(b =>
-        xxhash64((lit(b) +: (0 until rowsPerBand).map(r =>
-          col(s"h${b * rowsPerBand + r}"))): _*)): _*)).as(Seq("band", "bucket")))
+    val banded = sig.select(col(idCol).as("id"), col("n_sh"), minhashBands(bands, nHashes / bands))
       .withColumn("bsz", count(lit(1)).over(
         Window.partitionBy(col("band"), col("bucket"))))
       .where(col("bsz") <= maxBucket)
       .cache()
-    val l = banded.select(col("band"), col("bucket"), col("id").as("id_a"),
-      col("n_sh").as("n_a"))
-    val r = banded.select(col("band"), col("bucket"), col("id").as("id_b"),
-      col("n_sh").as("n_b"))
-    l.join(r, Seq("band", "bucket"))
-      .where(col("id_a") < col("id_b")
+    bucketPairs(banded, "id", "n_sh", minSizeRatio)
+  }
+
+  /** MinHash signature per set: one row per id with `h0 … h(nHashes-1)`,
+    * `h_i` = the min over the set's elements of `xxhash64(i, element)`.
+    * ONE explode + groupBy pass: the per-seed `array(min over transform(…))`
+    * spelling evaluates nHashes interpreted HOF lambdas per row (Spark has
+    * no codegen for higher-order functions; measured at 38% of the whole
+    * bench in round 2), while nHashes `min(xxhash64(seed, t))` aggregates
+    * compute the identical signature in one codegen'd partial-aggregation
+    * pass — map-side combine keeps the shuffle at |ids|×nHashes longs.
+    * With `sizeCol` the element count rides along under that name; it is
+    * the set size only for DISTINCT arrays. explode (not explode_outer)
+    * drops null and empty sets, which no Jaccard verify can keep. */
+  private[graft] def minhashSignature(sets: org.apache.spark.sql.DataFrame, idCol: String,
+      setCol: String, nHashes: Int,
+      sizeCol: Option[String] = None): org.apache.spark.sql.DataFrame = {
+    val aggs = (0 until nHashes).map(i => min(xxhash64(lit(i), col("s"))).as(s"h$i")) ++
+      sizeCol.map(c => count(lit(1)).as(c))
+    sets.select(col(idCol), explode(col(setCol)).as("s"))
+      .groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** LSH band keys over the [[minhashSignature]] columns, as a generator
+    * for a select: one `(band, bucket)` row per band b, bucket =
+    * `xxhash64(b, h(b·r), …, h(b·r+r−1))` with r = rowsPerBand. Two sets
+    * of Jaccard j share a band with P = 1-(1-j^r)^bands. */
+  private[graft] def minhashBands(bands: Int, rowsPerBand: Int): org.apache.spark.sql.Column =
+    posexplode(array((0 until bands).map(b =>
+      xxhash64((lit(b) +: (0 until rowsPerBand).map(r =>
+        col(s"h${b * rowsPerBand + r}"))): _*)): _*)).as(Seq("band", "bucket"))
+
+  /** Full within-bucket expansion: every pair of ids sharing a `(band,
+    * bucket)` row of `banded`, m(m-1)/2 per bucket — complete, quadratic
+    * in bucket depth, so for callers whose OUTPUT is the pair set (or
+    * whose buckets are capped). Pairs outside the length-ratio bound
+    * `least(n_a, n_b) >= greatest(n_a, n_b) * minSizeRatio` over
+    * `sizeCol` are pruned at the join. Returns distinct
+    * `(<idCol>_a, <idCol>_b)` with `_a < _b`. */
+  private[graft] def bucketPairs(banded: org.apache.spark.sql.DataFrame, idCol: String,
+      sizeCol: String, minSizeRatio: Double): org.apache.spark.sql.DataFrame = {
+    val (a, b) = (s"${idCol}_a", s"${idCol}_b")
+    def side(s: String) = banded.select(col("band"), col("bucket"),
+      col(idCol).as(s"${idCol}_$s"), col(sizeCol).as(s"n_$s"))
+    side("a").join(side("b"), Seq("band", "bucket"))
+      .where(col(a) < col(b)
         && least(col("n_a"), col("n_b")) >= greatest(col("n_a"), col("n_b")) * minSizeRatio)
-      .select(col("id_a"), col("id_b"))
+      .select(col(a), col(b))
       .distinct()
+  }
+
+  /** Chain + skip-level candidates: inside each `partitionBy` partition,
+    * sorted by `orderBy`, every row is paired with its next (lead 1) and
+    * next-but-one (lead 2) row — 2m−3 rows for a partition of m ≥ 2 rows,
+    * none across partitions, so linear at any bucket depth where the full
+    * expansion ([[bucketPairs]]) is quadratic. Enough when only
+    * CONNECTIVITY is consumed: lead(2) bridges a single dissimilar
+    * interloper between two similar rows (pure lead(1) chains measured
+    * 0.84 pair recall at sf0.1), and callers draw several independent
+    * orders so a pair missed in one is adjacent in another. ONE window op
+    * computes both lead levels (per-level branches paid the sort twice).
+    * Returns the `carried` columns of the row plus the neighbour's as
+    * `nb_<c>`; `carried.head` must be non-null (its null lead marks the
+    * partition's end). This is the point a fused banded-candidate exec
+    * would replace. */
+  private[graft] def chainNeighbours(df: org.apache.spark.sql.DataFrame,
+      partitionBy: Seq[org.apache.spark.sql.Column], orderBy: Seq[org.apache.spark.sql.Column],
+      carried: Seq[String]): org.apache.spark.sql.DataFrame = {
+    val w = Window.partitionBy(partitionBy: _*).orderBy(orderBy: _*)
+    val leads = for (k <- 1 to 2; c <- carried) yield lead(col(c), k).over(w).as(s"n${k}_$c")
+    df.select(carried.map(col) ++ leads: _*)
+      .select(carried.map(col) :+ explode(array((1 to 2).map(k =>
+        struct(carried.map(c => col(s"n${k}_$c").as(c)): _*)): _*)).as("nx"): _*)
+      .where(col(s"nx.${carried.head}").isNotNull)
+      .select(carried.map(col) ++ carried.map(c => col(s"nx.$c").as(s"nb_$c")): _*)
   }
 
   private val tokenizeWordcount = CatalogEntry.dialect(
@@ -211,6 +269,22 @@ object TextQueries {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
+  /** Per-(session, sfDir) memo of the two r19 encode frames (ADVICE r19),
+    * in [[graft.SessionMemo]]: dedup_containment and text_jaccard_tokens
+    * both consume [[tokenMasks]] and each call previously re-built the
+    * cached frame AND re-ran its eager vocab-count stats job. The encode is
+    * a pure function of the immutable corpus, so one copy per (session,
+    * sfDir, kind) is sound; the build owns its cached frame. `None`
+    * results (vocab over the bound) are memoized too: the bound decision
+    * is itself a pure function of the corpus, and re-counting to re-learn
+    * "too big" is exactly the duplicate stats job the memo exists to
+    * skip. */
+  private def tokenMasks(spark: org.apache.spark.sql.SparkSession,
+      sfDir: String): Option[org.apache.spark.sql.DataFrame] =
+    graft.SessionMemo(spark, ("encode", sfDir, "mask")) { own =>
+      tokenMasksBuild(spark, sfDir).map(own)
+    }
+
   /** Adaptive bitmask encoding of per-doc distinct token sets (r19,
     * VERDICT r18 #1 follow-through): when the corpus' global vocabulary
     * fits 64 bits (read from the data — one bounded job that collects at
@@ -223,29 +297,9 @@ object TextQueries {
     * `n = bit_count(mask) =` the distinct-token count. Consumers compute
     * |A∩B| as `bit_count(mask_a & mask_b)` — one instruction where the
     * general path sorted-merges two string arrays — with bit-identical
-    * integer results. Returns None above 64 tokens or when
-    * `graft.text.tokenBitmask=off`; callers then run their sorted-array
-    * general path (BitmaskPathSpec pins the two paths output-equal). */
-  /** Per-(session, sfDir) memo of the two r19 encode frames (ADVICE r19),
-    * in [[graft.SessionMemo]]: dedup_containment and text_jaccard_tokens
-    * both consume [[tokenMasks]] and each call previously re-built the
-    * cached frame AND re-ran its eager vocab-count stats job. The encode is
-    * a pure function of the immutable corpus, so one copy per (session,
-    * sfDir, kind) is sound; the build owns its cached frame. The conf knob
-    * is checked BEFORE the lookup (an "off" call never reads or writes the
-    * memo), so BitmaskPathSpec's auto/off flips still exercise both
-    * physical paths. `None` results (vocab over the bound) are memoized
-    * too: the bound decision is itself a pure function of the corpus, and
-    * re-counting to re-learn "too big" is exactly the duplicate stats job
-    * the memo exists to skip. */
-  private def tokenMasks(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): Option[org.apache.spark.sql.DataFrame] = {
-    if (!graft.GraftConf.tokenBitmask(spark)) return None
-    graft.SessionMemo(spark, ("encode", sfDir, "mask")) { own =>
-      tokenMasksBuild(spark, sfDir).map(own)
-    }
-  }
-
+    * integer results. Returns None above 64 tokens; callers then run their
+    * sorted-array general path (BitmaskPathSpec pins the two paths
+    * output-equal). */
   private def tokenMasksBuild(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): Option[org.apache.spark.sql.DataFrame] = {
     val t = Tables.documents(spark, sfDir)
@@ -410,36 +464,20 @@ object TextQueries {
     val reps = docs.groupBy(col("fp")).agg(min(col("doc_id")).as("rep_id"))
       .join(docs.select(col("doc_id").as("rep_id"), col("toks")), "rep_id")
       .cache()
-    // minhash signature per representative — ONE explode + groupBy pass.
-    // The naive form, array(min over transform(toks, xxhash64(i, t)))
-    // per seed, evaluates 40 interpreted HOF lambdas per row (Spark has
-    // no codegen for higher-order functions; measured at 38% of the whole
-    // bench in round 2). Exploding the distinct tokens once and taking 40
-    // min(xxhash64(seed, t)) aggregates computes the identical signature
-    // in a single codegen'd partial-aggregation pass: map-side combine
-    // keeps the shuffle at |reps|×40 longs regardless of corpus size.
-    val minExprs = (0 until nHashes).map(i =>
-      min(xxhash64(lit(i), col("t"))).as(s"h$i"))
-    // explode (not explode_outer) intentionally drops reps with null/empty
-    // token arrays from the signature stage: such docs can never pass the
-    // exact-Jaccard verify, so losing their (all-null) signatures changes
-    // nothing. Today split() never yields an empty array and null text
-    // yields a null fp that cannot equi-join; revisit with explode_outer if
-    // a future tokenizer can emit empty arrays.
-    // n_toks rides along (toks is already distinct, so count = set size):
-    // it funds the length-ratio prune at the bucket join below.
-    val sig = reps.select(col("fp"), explode(col("toks")).as("t"))
-      .groupBy(col("fp"))
-      .agg(minExprs.head, (minExprs.tail :+ count(lit(1)).as("n_toks")): _*)
+    // minhash signature per representative ([[minhashSignature]]). reps
+    // with null/empty token arrays drop out of the signature stage: such
+    // docs can never pass the exact-Jaccard verify, so losing their
+    // (all-null) signatures changes nothing. Today split() never yields an
+    // empty array and null text yields a null fp that cannot equi-join;
+    // revisit with explode_outer if a future tokenizer can emit empty
+    // arrays. n_toks rides along (toks is already distinct, so count = set
+    // size): it funds the length-ratio prune at the bucket join below.
+    val sig = minhashSignature(reps, "fp", "toks", nHashes, Some("n_toks"))
     // cached: both legs of the bucket self-join read this frame; without
     // the cache the explode+40-agg signature pass runs twice (exchange
     // reuse does not survive the differing leg projections). |reps|×bands
     // rows of (fp, n, band, bucket) — trivially small relative to corpus.
-    val banded = sig.select(
-      col("fp"), col("n_toks"),
-      posexplode(array((0 until bands).map(b =>
-        xxhash64((lit(b) +: (0 until rowsPerBand).map(r =>
-          col(s"h${b * rowsPerBand + r}"))): _*)): _*)).as(Seq("band", "bucket")))
+    val banded = sig.select(col("fp"), col("n_toks"), minhashBands(bands, rowsPerBand))
       .cache()
     // Length-ratio prune (standard in exact set-similarity joins):
     // jaccard(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so a pair can only reach
@@ -451,52 +489,30 @@ object TextQueries {
     // round(jaccard,4) >= threshold, which admits exact jaccard down to
     // threshold - 5e-5 — prune with a slightly conservative ratio so no
     // rounding-boundary pair the verify would keep can be dropped.
-    def ratioOk(na: org.apache.spark.sql.Column, nb: org.apache.spark.sql.Column) =
-      least(na, nb) >= greatest(na, nb) * (threshold - 1e-4)
-    val candidates = if (!chainCandidates) {
-      val l = banded.select(col("band"), col("bucket"), col("fp").as("fp_a"),
-        col("n_toks").as("n_a"))
-      val r = banded.select(col("band"), col("bucket"), col("fp").as("fp_b"),
-        col("n_toks").as("n_b"))
-      l.join(r, Seq("band", "bucket"))
-        .where(col("fp_a") < col("fp_b") && ratioOk(col("n_a"), col("n_b")))
-        .select(col("fp_a"), col("fp_b"))
-        .distinct()
-    } else {
-      // chain + skip-level candidates over SEVERAL independent bucket
-      // orders (design rationale in the scaladoc above; each window sort
-      // is O(m log m) per bucket, candidates ≤ 2·s·(m-1) — linear).
-      // Order 0 is n_toks-primary (a θ=0.9 pair differs ≤ ~10% in
-      // n_toks, so sorting by length makes true partners near-
-      // neighbors); the remaining s-1 orders are pure band+salt hashes,
-      // each contributing an independent adjacency draw — the union of s
-      // random chains over a bucket approaches a connected random graph
-      // over its verified subgraph (same levers as [[clusterLsh]],
-      // widened because this entry's 5 coarse bands give fewer
-      // independent draws than clusterLsh's 16).
+    val minRatio = threshold - 1e-4
+    val candidates = if (!chainCandidates) bucketPairs(banded, "fp", "n_toks", minRatio)
+    else {
+      // chain + skip-level candidates ([[chainNeighbours]]) over SEVERAL
+      // independent bucket orders (design rationale in the scaladoc above;
+      // candidates ≤ 2·s·(m-1) — linear). Order 0 is n_toks-primary (a
+      // θ=0.9 pair differs ≤ ~10% in n_toks, so sorting by length makes
+      // true partners near-neighbors); the remaining s-1 orders are pure
+      // band+salt hashes, each contributing an independent adjacency draw
+      // — the union of s random chains over a bucket approaches a
+      // connected random graph over its verified subgraph (same levers as
+      // [[clusterLsh]], widened because this entry's 5 coarse bands give
+      // fewer independent draws than clusterLsh's 16).
       val salts = graft.GraftConf.minhashChainSalts(spark)
-      // ONE window op per salt computes both lead levels (the
-      // lead(1)/lead(2)-as-separate-branches form paid the bucket sort
-      // twice per salt — measured at sf0.1); the per-salt frames union
-      // into one adjacency stream
-      val adj = (0 until salts).map { s =>
+      (0 until salts).map { s =>
         val ord =
           if (s == 0) Seq(col("n_toks"), xxhash64(col("band"), col("fp")), col("fp"))
           else Seq(xxhash64(lit(s), col("band"), col("fp")), col("fp"))
-        val chainW = Window.partitionBy(col("band"), col("bucket")).orderBy(ord: _*)
-        banded.select(col("fp"), col("n_toks"),
-          lead(col("fp"), 1).over(chainW).as("n1fp"),
-          lead(col("n_toks"), 1).over(chainW).as("n1n"),
-          lead(col("fp"), 2).over(chainW).as("n2fp"),
-          lead(col("n_toks"), 2).over(chainW).as("n2n"))
+        chainNeighbours(banded, Seq(col("band"), col("bucket")), ord, Seq("fp", "n_toks"))
       }.reduce(_ unionByName _)
-      adj
-        .select(col("fp"), col("n_toks"), explode(array(
-          struct(col("n1fp").as("nfp"), col("n1n").as("nn")),
-          struct(col("n2fp").as("nfp"), col("n2n").as("nn")))).as("nx"))
-        .where(col("nx.nfp").isNotNull && ratioOk(col("n_toks"), col("nx.nn")))
-        .select(least(col("fp"), col("nx.nfp")).as("fp_a"),
-          greatest(col("fp"), col("nx.nfp")).as("fp_b"))
+        .where(least(col("n_toks"), col("nb_n_toks")) >=
+          greatest(col("n_toks"), col("nb_n_toks")) * minRatio)
+        .select(least(col("fp"), col("nb_fp")).as("fp_a"),
+          greatest(col("fp"), col("nb_fp")).as("fp_b"))
         .distinct()
     }
     val ta = reps.select(col("fp").as("fp_a"), col("toks").as("toks_a"))
@@ -546,6 +562,37 @@ object TextQueries {
     intra.unionByName(cross).orderBy(col("doc_a"), col("doc_b"))
   }
 
+  /** Rep-space clustering tail shared by the cluster-form entries
+    * ([[minhashLsh]], [[simhashCluster]]): verified `key` pairs (columns
+    * `keyA`, `keyB` of `pairs`) become edges in rep_id space through
+    * `repIds` (key → rep_id = min member doc_id), [[ccLabels]] labels the
+    * touched reps, untouched reps keep their own id, and `members` (key →
+    * doc_id) fans the labels back out. Min-propagation over rep ids
+    * converges to the min doc_id of the whole member component, so
+    * cluster_id is deterministic. cluster_size comes from one keyed agg +
+    * join-back (both shuffle on the cluster key, so AQE coalesces them into
+    * one exchange reuse); the ≥2 filter keeps the output to dedup-relevant
+    * rows: `(doc_id, cluster_id, cluster_size)` ordered by cluster, doc. */
+  private[graft] def repClusters(members: org.apache.spark.sql.DataFrame,
+      repIds: org.apache.spark.sql.DataFrame, key: String,
+      pairs: org.apache.spark.sql.DataFrame, keyA: String,
+      keyB: String): org.apache.spark.sql.DataFrame = {
+    val edges = pairs.select(col(keyA), col(keyB))
+      .join(repIds.select(col(key).as(keyA), col("rep_id").as("src")), keyA)
+      .join(repIds.select(col(key).as(keyB), col("rep_id").as("dst")), keyB)
+      .select(col("src"), col("dst"))
+    val labels = ccLabels(edges) // (node, comp) — only reps touched by an edge
+    val keyLab = repIds.join(labels, repIds("rep_id") === labels("node"), "left")
+      .select(col(key), coalesce(col("comp"), col("rep_id")).as("cluster_id"))
+    val docLab = members.join(keyLab, key).select(col("doc_id"), col("cluster_id"))
+    val sizes = docLab.groupBy(col("cluster_id"))
+      .agg(count(lit(1)).as("cluster_size"))
+      .where(col("cluster_size") >= 2)
+    docLab.join(sizes, "cluster_id")
+      .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
+      .orderBy(col("cluster_id"), col("doc_id"))
+  }
+
   /** MinHash + LSH banding — the O(n) near-dup path for 100 TB, in
     * CLUSTER-REPRESENTATIVE form (re-specced round 13, VERDICT r12 #1).
     *
@@ -575,53 +622,9 @@ object TextQueries {
   private val minhashLsh = CatalogEntry.noOracle("dedup_minhash_lsh") { (spark, sfDir) =>
     val (members, repIds, repPairs) =
       minhashRepStage(spark, sfDir, chainCandidates = true)
-    // verified rep pairs → edges in rep_id (= min member doc_id) space;
-    // min-propagation over rep ids therefore converges to the min doc_id
-    // of the whole member component, giving a deterministic cluster label
-    val edges = repPairs.select(col("fp_a"), col("fp_b"))
-      .join(repIds.select(col("fp").as("fp_a"), col("rep_id").as("src")), "fp_a")
-      .join(repIds.select(col("fp").as("fp_b"), col("rep_id").as("dst")), "fp_b")
-      .select(col("src"), col("dst"))
-    val labels = ccLabels(edges) // (node, comp) — only reps touched by an edge
-    val fpLab = repIds.join(labels, repIds("rep_id") === labels("node"), "left")
-      .select(col("fp"), coalesce(col("comp"), col("rep_id")).as("cluster_id"))
-    val docLab = members.join(fpLab, "fp").select(col("doc_id"), col("cluster_id"))
-    // cluster_size via one keyed agg + join-back (both shuffle on the
-    // cluster key, so AQE coalesces them into one exchange reuse); the
-    // ≥2 filter keeps the output to dedup-relevant rows only
-    val sizes = docLab.groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("cluster_size"))
-      .where(col("cluster_size") >= 2)
-    docLab.join(sizes, "cluster_id")
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
-      .orderBy(col("cluster_id"), col("doc_id"))
+    repClusters(members, repIds, "fp", repPairs, "fp_a", "fp_b")
   }
 
-  /** SimHash near-dup: 64-bit sign-of-sums fingerprint over token hashes.
-    * The bit sums come from ONE explode + groupBy pass (64 conditional
-    * sums in a single aggregation — not 64 array traversals); candidates
-    * from 16-bit block collisions (a pair within Hamming distance 3 must
-    * agree on at least one of the 4 blocks), verified by bit_count(xor).
-    * Fully deterministic; no oracle (xxhash64). Identical token sets ⇒
-    * identical fingerprints ⇒ Hamming 0, so exact dups are found with
-    * recall 1.0 (property-tested).
-    *
-    * Scale spelling (r16 100× fix — 260 s → see BASELINE.md): the naive
-    * doc-level co-block self-join is quadratic in clone-CLIQUE depth (a
-    * 100-deep near-dup clique shares most blocks, so one (block, key)
-    * bucket held ~25k docs → ~1.2 B joined rows, then a 420 M-row
-    * DISTINCT to collapse multi-block agreements). Hamming distance
-    * depends ONLY on the two fingerprint values, so the banding runs at
-    * the DISTINCT-simhash level — bucket occupancy collapses from clique
-    * depth to distinct-value count — and doc pairs fan back out through
-    * two value→member joins, linear in OUTPUT size. Multi-block
-    * agreements are deduped with the first-agreeing-block trick (emit a
-    * value pair only from the lowest block index on which it agrees — a
-    * map-side bit-math filter) instead of a global DISTINCT, so no
-    * quadratic-shaped shuffle survives anywhere. Output is unchanged:
-    * every qualifying (doc_a < doc_b, hamming) pair exactly once — the
-    * OUTPUT itself is quadratic in clique depth by contract, and scales
-    * with true near-dup pair mass, not with the join plan. */
   /** Per-document 64-bit SimHash fingerprints `(doc_id, simhash)` — the
     * sign-of-sums construction both simhash spellings share: one explode +
     * groupBy pass computes all 64 conditional bit sums (not 64 array
@@ -665,6 +668,31 @@ object TextQueries {
       .where(col("hamming") <= maxHamming)
   }
 
+  /** SimHash near-dup: 64-bit sign-of-sums fingerprint over token hashes.
+    * The bit sums come from ONE explode + groupBy pass (64 conditional
+    * sums in a single aggregation — not 64 array traversals); candidates
+    * from 16-bit block collisions (a pair within Hamming distance 3 must
+    * agree on at least one of the 4 blocks), verified by bit_count(xor).
+    * Fully deterministic; no oracle (xxhash64). Identical token sets ⇒
+    * identical fingerprints ⇒ Hamming 0, so exact dups are found with
+    * recall 1.0 (property-tested).
+    *
+    * Scale spelling (r16 100× fix — 260 s → see BASELINE.md): the naive
+    * doc-level co-block self-join is quadratic in clone-CLIQUE depth (a
+    * 100-deep near-dup clique shares most blocks, so one (block, key)
+    * bucket held ~25k docs → ~1.2 B joined rows, then a 420 M-row
+    * DISTINCT to collapse multi-block agreements). Hamming distance
+    * depends ONLY on the two fingerprint values, so the banding runs at
+    * the DISTINCT-simhash level — bucket occupancy collapses from clique
+    * depth to distinct-value count — and doc pairs fan back out through
+    * two value→member joins, linear in OUTPUT size. Multi-block
+    * agreements are deduped with the first-agreeing-block trick (emit a
+    * value pair only from the lowest block index on which it agrees — a
+    * map-side bit-math filter) instead of a global DISTINCT, so no
+    * quadratic-shaped shuffle survives anywhere. Output is unchanged:
+    * every qualifying (doc_a < doc_b, hamming) pair exactly once — the
+    * OUTPUT itself is quadratic in clique depth by contract, and scales
+    * with true near-dup pair mass, not with the join plan. */
   private val simhash = CatalogEntry.noOracle("dedup_simhash") { (spark, sfDir) =>
     // pigeonhole: within Hamming distance d, a pair must agree on one of
     // d+1 equal blocks; maxHamming is corpus-tunable via spark.conf
@@ -710,10 +738,10 @@ object TextQueries {
     * pairs), edges contracted to rep space (rep = min doc_id per distinct
     * fingerprint: clone cliques collapse to ONE node before propagation,
     * the same contraction dedup_cluster_lsh rides), then the shared
-    * [[ccLabels]] min-label propagation. cluster_id = min doc_id of the
-    * component (deterministic); singleton VALUES with ≥2 member docs are
-    * hamming-0 clone groups and cluster under their rep without touching
-    * propagation. No oracle (xxhash64 fingerprints are not DuckDB-
+    * [[repClusters]] tail over [[ccLabels]] min-label propagation.
+    * cluster_id = min doc_id of the component (deterministic); singleton
+    * VALUES with ≥2 member docs are hamming-0 clone groups and cluster
+    * under their rep without touching propagation. No oracle (xxhash64 fingerprints are not DuckDB-
     * reproducible); CcSpec carries the equivalence floor. */
   private val simhashCluster = CatalogEntry.noOracle("dedup_simhash_cluster") { (spark, sfDir) =>
     val maxHamming = graft.GraftConf.simhashMaxHamming(spark)
@@ -733,23 +761,7 @@ object TextQueries {
     // over rep ids therefore converges to the min doc_id of the whole
     // member component — the deterministic cluster label
     val repIds = sim.groupBy(col("simhash")).agg(min(col("doc_id")).as("rep_id")).cache()
-    val edges = valPairs
-      .join(repIds.select(col("simhash").as("sh_a"), col("rep_id").as("src")), "sh_a")
-      .join(repIds.select(col("simhash").as("sh_b"), col("rep_id").as("dst")), "sh_b")
-      .select(col("src"), col("dst"))
-    val labels = ccLabels(edges) // (node, comp) — only reps touched by an edge
-    val shLab = repIds.join(labels, repIds("rep_id") === labels("node"), "left")
-      .select(col("simhash"), coalesce(col("comp"), col("rep_id")).as("cluster_id"))
-    val docLab = sim.join(shLab, "simhash").select(col("doc_id"), col("cluster_id"))
-    // cluster_size via one keyed agg + join-back; the ≥2 filter keeps the
-    // output to dedup-relevant rows only (same contract as the other
-    // cluster entries)
-    val sizes = docLab.groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("cluster_size"))
-      .where(col("cluster_size") >= 2)
-    docLab.join(sizes, "cluster_id")
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
-      .orderBy(col("cluster_id"), col("doc_id"))
+    repClusters(sim, repIds, "simhash", valPairs, "sh_a", "sh_b")
   }
 
   /** n-gram (token-bigram) Jaccard — shingle-level near-dup: word-order
@@ -800,7 +812,7 @@ object TextQueries {
               |WHERE ROUND(size(array_intersect(a.grams, b.grams)) * CAST(1.0 AS DOUBLE) /
               |            (size(a.grams) + size(b.grams) - size(array_intersect(a.grams, b.grams))), 4) >= 0.2
               |ORDER BY doc_a, doc_b""".stripMargin) { (spark, sfDir) =>
-    // dictionary fast path (see [[gramIds]] / GraftConf.gramDict): bigram
+    // dictionary fast path (see [[gramIds]]): bigram
     // sets ride as ARRAY<BIGINT> ids, the per-pair merge compares
     // primitive longs — same integers, same output
     gramIds(spark, sfDir).map { enc =>
@@ -829,21 +841,24 @@ object TextQueries {
 
   /** Adaptive dictionary encoding of per-doc distinct bigram sets (r19;
     * the [[tokenMasks]] companion for shingle vocabularies that outgrow
-    * 64 bits but stay broadcastable — gate and exactness argument on
-    * GraftConf.gramDict). Returns `(doc_id, lang, n_chars, ng, gids)`:
+    * 64 bits but stay broadcastable: the 31-token corpus gives ≤961
+    * observed bigrams). When the counted distinct-bigram vocabulary is
+    * ≤ 2^16, bigrams ride as dictionary-assigned ARRAY<BIGINT> ids (a
+    * bijection — row_number over the sorted distinct bigrams, no hashing)
+    * and the per-pair intersect is the primitive-long sorted merge
+    * (`sorted_intersect_size_l`) over 8 B elements instead of the UTF8
+    * merge over ~11 B strings; BitmaskPathSpec pins path equality.
+    * Returns `(doc_id, lang, n_chars, ng, gids)`:
     * `ng` = the ORIGINAL size(grams) including a possible null element
     * (degenerate single-token docs — the sizes in the Jaccard denominator
     * count it), `gids` = the sorted non-null dictionary ids (the merge
     * skips null elements in the string spelling, so dropping them here is
-    * the same semantics). None above 2^16 observed bigrams or when
-    * `graft.text.gramDict=off`. */
+    * the same semantics). None above 2^16 observed bigrams. */
   private def gramIds(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): Option[org.apache.spark.sql.DataFrame] = {
-    if (!graft.GraftConf.gramDict(spark)) return None
+      sfDir: String): Option[org.apache.spark.sql.DataFrame] =
     graft.SessionMemo(spark, ("encode", sfDir, "gram")) { own =>
       gramIdsBuild(spark, sfDir).map(own)
     }
-  }
 
   private def gramIdsBuild(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): Option[org.apache.spark.sql.DataFrame] = {
@@ -1462,23 +1477,6 @@ object TextQueries {
       .orderBy(col("doc_id"))
   }
 
-  /** Min-label connected components over a one-directional edge list
-    * (src, dst) — returns (node, comp) where comp is the component's
-    * minimum node id. Shared by the exact ([[clusterCc]]) and
-    * candidate-driven ([[clusterLsh]]) clustering entries.
-    *
-    * Shape: label propagation (adopt the min label across edges) +
-    * pointer jumping (comp := comp's comp), three iterations per
-    * materialization, with EDGE CONTRACTION between rounds — every edge
-    * is rewritten through the current labeling and intra-cluster edges
-    * drop. Connectivity of the quotient is exactly the original's
-    * (labels only merge connected nodes; an inter-cluster edge survives
-    * as an edge between the clusters' current representatives), and the
-    * propagation joins run on the CONTRACTED list from round 2 on. This
-    * is what survives 100 TB: the measured sf0.1 near-dup graph starts
-    * at 390k directed edges over 4.8k nodes (dense near-clique blobs)
-    * and collapses to a few hundred after one round — without
-    * contraction every round re-joins the full original edge list. */
   /** Materialization primitive for the propagation loop. Default is
     * `localCheckpoint` (executor-local blocks — fastest, fine in local
     * mode and for ephemeral jobs). Setting `graft.cc.checkpointDir` on
@@ -1503,6 +1501,23 @@ object TextQueries {
     }
   }
 
+  /** Min-label connected components over a one-directional edge list
+    * (src, dst) — returns (node, comp) where comp is the component's
+    * minimum node id. Shared by the exact ([[clusterCc]]) and
+    * candidate-driven ([[clusterLsh]]) clustering entries.
+    *
+    * Shape: label propagation (adopt the min label across edges) +
+    * pointer jumping (comp := comp's comp), three iterations per
+    * materialization, with EDGE CONTRACTION between rounds — every edge
+    * is rewritten through the current labeling and intra-cluster edges
+    * drop. Connectivity of the quotient is exactly the original's
+    * (labels only merge connected nodes; an inter-cluster edge survives
+    * as an edge between the clusters' current representatives), and the
+    * propagation joins run on the CONTRACTED list from round 2 on. This
+    * is what survives 100 TB: the measured sf0.1 near-dup graph starts
+    * at 390k directed edges over 4.8k nodes (dense near-clique blobs)
+    * and collapses to a few hundred after one round — without
+    * contraction every round re-joins the full original edge list. */
   private[graft] def ccLabels(edges: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     var bi = ccCheckpoint(edges
@@ -1515,9 +1530,10 @@ object TextQueries {
     // iterations fused per materialization: each fused step is 2 joins of
     // plan depth but ZERO extra driver actions, and the serialized
     // action-per-round loop is the latency lever at scale — deeper fusion
-    // trades plan size for fewer materializations (VERDICT r11 #3 knob)
-    val fuse = edges.sparkSession.conf.get("graft.cc.fuse", "3").toInt
-    require(fuse >= 1 && fuse <= 10, s"graft.cc.fuse=$fuse out of [1,10]")
+    // trades plan size for fewer materializations. 3 is measured
+    // (BASELINE.md rounds 12 and 14): 4-5 blow up the plan tree, 1-2 pay
+    // extra serialized rounds
+    val fuse = 3
     def iterate(cur: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
       val viaEdge = bi.join(cur, bi("src") === cur("node"))
         .select(bi("dst").as("node"), col("comp"))
@@ -1575,8 +1591,6 @@ object TextQueries {
         converged = bi.isEmpty // no inter-cluster edges ⇒ fixpoint reached
       }
     }
-    if (edges.sparkSession.conf.get("graft.cc.debug", "false").toBoolean)
-      System.err.println(s"[ccLabels] rounds=$rounds (fuse=$fuse)")
     labels
   }
 
@@ -1638,52 +1652,29 @@ object TextQueries {
     val reps = t.groupBy(col("fp")).agg(min(col("doc_id")).as("rep_id"))
       .join(t.select(col("doc_id").as("rep_id"), col("toks"), col("htoks")), "rep_id")
     // one signature per distinct token set; banding fans out per member
-    val minExprs = (0 until nHashes).map(i =>
-      min(xxhash64(lit(i), col("s"))).as(s"h$i"))
-    val sig = reps.select(col("fp"), explode(col("toks")).as("s"))
-      .groupBy(col("fp")).agg(minExprs.head, minExprs.tail: _*)
+    val sig = minhashSignature(reps, "fp", "toks", nHashes)
     val banded = members.join(sig, "fp").select(
-      col("fp"), col("doc_id"), col("lang"), col("n_chars"),
-      posexplode(array((0 until bands).map(b =>
-        xxhash64((lit(b) +: (0 until rowsPerBand).map(r =>
-          col(s"h${b * rowsPerBand + r}"))): _*)): _*)).as(Seq("band", "bucket")))
-    // chain + skip-level candidates: lead(1) links neighbors, lead(2)
-    // bridges a single dissimilar interloper sitting between two similar
-    // docs (the dominant recall loss of pure chains — measured 0.84 pair
-    // recall with lead(1) alone at sf0.1). Still ≤ 2(m-1) candidates per
-    // bucket — linear, unlike the m(m-1)/2 full expansion.
-    // Chain order = (nc/20 bin, band-salted hash): the hash makes each
-    // band contribute DIFFERENT adjacencies inside a bin — with one fixed
-    // order every band repeats the same broken chain around the same
-    // interlopers (measured: recall stuck at 0.87 with nc order); with 16
-    // independent orders a similar pair is adjacent in some band with
-    // near-certainty (union of 16 random chains over a bin ≈ connected
-    // random graph). The nc bin keeps candidates ±20-plausible; the pair
-    // filter below enforces the exact bound.
+      col("fp"), col("doc_id"), col("lang"), col("n_chars"), minhashBands(bands, rowsPerBand))
+    // chain + skip-level candidates ([[chainNeighbours]]), ≤ 2(m-1) per
+    // bucket. Chain order = (nc/20 bin, band-salted hash): the hash makes
+    // each band contribute DIFFERENT adjacencies inside a bin — with one
+    // fixed order every band repeats the same broken chain around the
+    // same interlopers (measured: recall stuck at 0.87 with nc order);
+    // with 16 independent orders a similar pair is adjacent in some band
+    // with near-certainty (union of 16 random chains over a bin ≈
+    // connected random graph). The nc bin keeps candidates ±20-plausible;
+    // the pair filter below enforces the exact bound.
     // alternating bands use phase-shifted nc bins (+10): a ±20-close pair
     // split by a bin boundary in even bands shares a bin in odd bands
     val ncBin = floor((col("n_chars") + pmod(col("band"), lit(2)) * 10) / 20)
-    val chainW = Window.partitionBy(col("band"), col("bucket"), col("lang"))
-      .orderBy(ncBin, xxhash64(col("band"), col("doc_id")), col("doc_id"))
-    // ONE window op computes both lead levels (the per-k branches paid
-    // the bucket sort twice)
-    val cand = banded
-      .select(col("doc_id"), col("fp"), col("n_chars"),
-        lead(col("doc_id"), 1).over(chainW).as("n1id"),
-        lead(col("fp"), 1).over(chainW).as("n1fp"),
-        lead(col("n_chars"), 1).over(chainW).as("n1nc"),
-        lead(col("doc_id"), 2).over(chainW).as("n2id"),
-        lead(col("fp"), 2).over(chainW).as("n2fp"),
-        lead(col("n_chars"), 2).over(chainW).as("n2nc"))
-      .select(col("doc_id"), col("fp"), col("n_chars"), explode(array(
-        struct(col("n1id").as("nid"), col("n1fp").as("nfp"), col("n1nc").as("nnc")),
-        struct(col("n2id").as("nid"), col("n2fp").as("nfp"), col("n2nc").as("nnc")))).as("nx"))
-      .where(col("nx.nid").isNotNull
-        && col("nx.nnc").between(col("n_chars") - 20, col("n_chars") + 20))
-      .select(least(col("doc_id"), col("nx.nid")).as("src"),
-        greatest(col("doc_id"), col("nx.nid")).as("dst"),
-        least(col("fp"), col("nx.nfp")).as("fa"),
-        greatest(col("fp"), col("nx.nfp")).as("fb"))
+    val cand = chainNeighbours(banded, Seq(col("band"), col("bucket"), col("lang")),
+        Seq(ncBin, xxhash64(col("band"), col("doc_id")), col("doc_id")),
+        Seq("doc_id", "fp", "n_chars"))
+      .where(col("nb_n_chars").between(col("n_chars") - 20, col("n_chars") + 20))
+      .select(least(col("doc_id"), col("nb_doc_id")).as("src"),
+        greatest(col("doc_id"), col("nb_doc_id")).as("dst"),
+        least(col("fp"), col("nb_fp")).as("fa"),
+        greatest(col("fp"), col("nb_fp")).as("fb"))
       .distinct()
     val ga = reps.select(col("fp").as("fa"), col("htoks").as("toks_a"))
     val gb = reps.select(col("fp").as("fb"), col("htoks").as("toks_b"))
@@ -2176,155 +2167,162 @@ object TextQueries {
     * the re-spec exists to escape).
     */
   private val containmentPrefix = CatalogEntry.noOracle("dedup_containment_prefix") {
-    (spark, sfDir) =>
-      graft.functions.TextFunctions.ensureRegistered(spark)
-      val theta = 0.95
-      val dfCap = graft.GraftConf.verifyMaxBucket(spark)
-      val candCap = graft.GraftConf.containmentCandCap(spark)
-      // fp is LANG-SCOPED (unlike the minhash family's): the blocked
-      // ground truth pairs same-lang only, so a clone group spanning two
-      // langs must stay two groups — folding lang into the fingerprint
-      // makes fp↔(lang,fp) 1:1 and every later fp-keyed join lang-safe
-      // fp must be NULL-PROPAGATING (concat, not concat_ws): concat_ws
-      // silently drops a null array_join(toks) for null-text docs, which
-      // would collapse every null-text doc of a lang into one "clone"
-      // group with has_container=true — diverging from the blocked truth
-      // (which never flags them) and from the minhash family's null-fp
-      // convention (minhashRepStage's md5(array_join) is null on null text)
-      // fp as 16-byte BINARY, not the 32-char hex string (same r15 lesson
-      // as dedup_cluster_lsh: fp rides the widest frames and every window
-      // partition key — the hex spelling doubles those shuffle bytes)
-      val t = Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("lang"),
-          sort_array(array_distinct(split(col("text"), " "))).as("toks"))
-        .withColumn("fp", expr(
-          "to_binary(md5(concat(lang, '|', array_join(toks, ' '))), 'hex')"))
-        .cache()
-      val members = t.select(col("doc_id"), col("lang"), col("fp"))
-      // null-fp docs are excluded from the group/rep pipeline entirely —
-      // they are not clones of each other; they re-enter at the final
-      // left join below as singleton has_container=false rows
-      val groups = t.where(col("fp").isNotNull).groupBy(col("lang"), col("fp"))
-        .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("m"))
-      val reps = groups
-        .join(t.select(col("doc_id").as("rep_id"), col("toks")), "rep_id")
-        .select(col("lang"), col("fp"), col("toks"), size(col("toks")).as("n"))
-        .cache()
-      // global rarest-first token order: df over REPS per lang. Tokens
-      // ride as 64-bit xxhash64(lang, token) keys, never strings: the
-      // key only ever JOINS prefix↔index (exact verification reads the
-      // full toks arrays later), folding lang into the key makes every
-      // downstream key single-column, and a 64-bit collision (odds
-      // ~|vocab|²/2⁶⁴) merely merges two posting lists — spurious
-      // candidates are removed by the exact verify (which re-checks LANG
-      // equality alongside the token containment, so even a cross-lang
-      // hk collision whose token sets overlap ≥θ cannot flag a doc the
-      // same-lang blocked truth never pairs — ADVICE r18), true matches
-      // are always preserved, and the prefix-filter completeness argument
-      // holds under ANY consistent global token order (df asc, hk asc
-      // here), so correctness is collision-immune.
-      val df = reps.select(col("lang"), explode(col("toks")).as("t"))
-        .select(xxhash64(col("lang"), col("t")).as("hk"))
-        .groupBy(col("hk")).agg(count(lit(1)).as("df"))
-      // cached: BOTH the prefix extraction and the inverted index read
-      // this frame, and it is the entry's widest intermediate (|reps| ×
-      // tokens-per-doc rows) — uncached, Spark recomputes the explode +
-      // df join once per reference (~2× the index-build cost, measured
-      // r18 at 100×: 116 → 90 s from the cache alone; binary fp + hashed
-      // token keys take it further — see BASELINE.md round-18 addendum).
-      // Harness sweep owns the unpersist.
-      val tok = reps.select(col("fp"), col("n"), col("lang"), explode(col("toks")).as("t"))
-        .select(col("fp"), col("n"), xxhash64(col("lang"), col("t")).as("hk"))
-        .join(df, Seq("hk"))
-        .cache()
-      // prefix = the (floor(0.05 n) + 2) rarest tokens per rep, over the
-      // FULL token set (+2: +1 pigeonhole, +1 absorbs the double-compare
-      // boundary of the verify's inter/n >= 0.95). Never df-filtered: a
-      // fully-templated doc whose every token is common must still get
-      // candidates (a dropped-prefix variant measured recall 0.68 at
-      // sf0.001 - the misses were exactly the all-common-token docs).
-      // fp is lang-scoped 1:1, so partitioning by fp alone is lang-safe
-      val rankW = Window.partitionBy(col("fp"))
-        .orderBy(col("df"), col("hk"))
-      val prefix = tok
-        .withColumn("r", row_number().over(rankW))
-        .where(col("r") <= floor(col("n") * (1 - theta)) + 2)
-        .select(col("hk"), col("fp").as("fp_a"), col("n").as("n_a"))
-      // inverted index with CAPPED posting lists: each (lang, token)
-      // lists at most verifyMaxBucket reps, BIGGEST first (a container
-      // must hold >=0.95 of the probe's vocabulary, so large supersets
-      // are the likeliest witnesses) - rare-token postings stay complete
-      // (pigeonhole bound intact), stop-token postings are truncated
-      // rather than dropped, bounding candidates per prefix token while
-      // keeping template-heavy docs reachable
-      val postW = Window.partitionBy(col("hk"))
-        .orderBy(col("n").desc, col("fp"))
-      val index = tok
-        .withColumn("pr", row_number().over(postW))
-        .where(col("pr") <= dfCap)
-        .select(col("hk"), col("fp").as("fp_b"), col("n").as("n_b"))
-      // candidates: share a prefix token, container at least θ× the size;
-      // capped per contained rep, biggest container first (deterministic)
-      val capW = Window.partitionBy(col("fp_a"))
-        .orderBy(col("n_b").desc, col("fp_b"))
-      // size prune epsilon-slackened: the verify compares inter/n_a in
-      // double arithmetic, so the prune must not drop a boundary
-      // container the verify would keep (n_b >= inter always)
-      val cand = prefix.join(index, Seq("hk"))
-        .where(col("fp_a") =!= col("fp_b") && col("n_b") >= col("n_a") * (theta - 1e-9))
-        .select(col("fp_a"), col("n_a"), col("fp_b"), col("n_b"))
-        .distinct()
-        .withColumn("rk", row_number().over(capW))
-        .where(col("rk") <= candCap)
-      // dictionary-encoded verify (VERDICT r19 #4, GraftConf.prefixDict):
-      // when the rep-level (lang, token) vocabulary fits 2^16, the verify
-      // frames carry sorted ARRAY<BIGINT> dictionary ids instead of the
-      // string arrays — the join-back shuffles 8 B elements and the
-      // per-candidate intersect is the primitive-long merge. The
-      // dictionary is a bijection (row_number over the observed pairs, no
-      // hashing), so intersect SIZES are identical to the string merge
-      // and the has_container output cannot move. explode_outer + left
-      // join + coalesce keep a hypothetical empty-token rep present with
-      // tids=[] (parity with the string path's empty-array intersect).
-      val dictOpt = if (!graft.GraftConf.prefixDict(spark)) None else {
-        val vocab = reps.select(col("lang"), explode(col("toks")).as("t")).distinct()
-        if (vocab.count() > (1 << 16)) None // bounded driver action: one scalar
-        else Some(vocab.select(col("lang"), col("t"),
-          (row_number().over(Window.orderBy(col("lang"), col("t"))) - 1)
-            .cast("long").as("tid")))
-      }
-      val verifyReps = dictOpt match {
-        case Some(dict) =>
-          reps.select(col("fp"), col("lang"), explode_outer(col("toks")).as("t"))
-            .join(broadcast(dict), Seq("lang", "t"), "left")
-            .groupBy(col("fp"), col("lang"))
-            .agg(sort_array(collect_list(col("tid"))).as("vtoks"))
-        case None =>
-          reps.select(col("fp"), col("lang"), col("toks").as("vtoks"))
-      }
-      val ta = verifyReps.select(col("fp").as("fp_a"), col("lang").as("lang_a"),
-        col("vtoks").as("toks_a"))
-      val tb = verifyReps.select(col("fp").as("fp_b"), col("lang").as("lang_b"),
-        col("vtoks").as("toks_b"))
-      // both verify spellings bind the same column names; pick the long or
-      // string merge kernel to match the carried element type
-      val inter =
-        if (dictOpt.isDefined) expr("sorted_intersect_size_l(toks_a, toks_b)")
-        else expr("sorted_intersect_size(toks_a, toks_b)")
-      val contained = cand.join(ta, "fp_a").join(tb, "fp_b")
-        .where(col("lang_a") === col("lang_b") && inter * lit(1.0) / col("n_a") >= theta)
-        .select(col("fp_a")).distinct()
-        .withColumn("hit", lit(true))
-      // left join: a null-fp (null-text) member matches no group and no
-      // containment hit — coalesce gives it m=1 ⇒ has_container=false,
-      // exactly the blocked truth's treatment (it never pairs null text)
-      members
-        .join(groups.select(col("lang"), col("fp"), col("m")), Seq("lang", "fp"), "left")
-        .join(contained.withColumnRenamed("fp_a", "fp"), Seq("fp"), "left")
-        .select(col("doc_id"),
-          (coalesce(col("m"), lit(1L)) >= 2 ||
-            coalesce(col("hit"), lit(false))).as("has_container"))
-        .orderBy(col("doc_id"))
+    (spark, sfDir) => containmentPrefixFlags(spark, sfDir, dictVerify = true)
+  }
+
+  /** [[containmentPrefix]]'s plan; `dictVerify = false` keeps the exact
+    * verify on the string token arrays even where the dictionary fits. */
+  private[graft] def containmentPrefixFlags(spark: org.apache.spark.sql.SparkSession,
+      sfDir: String, dictVerify: Boolean): org.apache.spark.sql.DataFrame = {
+    graft.functions.TextFunctions.ensureRegistered(spark)
+    val theta = 0.95
+    val dfCap = graft.GraftConf.verifyMaxBucket(spark)
+    val candCap = graft.GraftConf.containmentCandCap(spark)
+    // fp is LANG-SCOPED (unlike the minhash family's): the blocked
+    // ground truth pairs same-lang only, so a clone group spanning two
+    // langs must stay two groups — folding lang into the fingerprint
+    // makes fp↔(lang,fp) 1:1 and every later fp-keyed join lang-safe
+    // fp must be NULL-PROPAGATING (concat, not concat_ws): concat_ws
+    // silently drops a null array_join(toks) for null-text docs, which
+    // would collapse every null-text doc of a lang into one "clone"
+    // group with has_container=true — diverging from the blocked truth
+    // (which never flags them) and from the minhash family's null-fp
+    // convention (minhashRepStage's md5(array_join) is null on null text)
+    // fp as 16-byte BINARY, not the 32-char hex string (same r15 lesson
+    // as dedup_cluster_lsh: fp rides the widest frames and every window
+    // partition key — the hex spelling doubles those shuffle bytes)
+    val t = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("lang"),
+        sort_array(array_distinct(split(col("text"), " "))).as("toks"))
+      .withColumn("fp", expr(
+        "to_binary(md5(concat(lang, '|', array_join(toks, ' '))), 'hex')"))
+      .cache()
+    val members = t.select(col("doc_id"), col("lang"), col("fp"))
+    // null-fp docs are excluded from the group/rep pipeline entirely —
+    // they are not clones of each other; they re-enter at the final
+    // left join below as singleton has_container=false rows
+    val groups = t.where(col("fp").isNotNull).groupBy(col("lang"), col("fp"))
+      .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("m"))
+    val reps = groups
+      .join(t.select(col("doc_id").as("rep_id"), col("toks")), "rep_id")
+      .select(col("lang"), col("fp"), col("toks"), size(col("toks")).as("n"))
+      .cache()
+    // global rarest-first token order: df over REPS per lang. Tokens
+    // ride as 64-bit xxhash64(lang, token) keys, never strings: the
+    // key only ever JOINS prefix↔index (exact verification reads the
+    // full toks arrays later), folding lang into the key makes every
+    // downstream key single-column, and a 64-bit collision (odds
+    // ~|vocab|²/2⁶⁴) merely merges two posting lists — spurious
+    // candidates are removed by the exact verify (which re-checks LANG
+    // equality alongside the token containment, so even a cross-lang
+    // hk collision whose token sets overlap ≥θ cannot flag a doc the
+    // same-lang blocked truth never pairs — ADVICE r18), true matches
+    // are always preserved, and the prefix-filter completeness argument
+    // holds under ANY consistent global token order (df asc, hk asc
+    // here), so correctness is collision-immune.
+    val df = reps.select(col("lang"), explode(col("toks")).as("t"))
+      .select(xxhash64(col("lang"), col("t")).as("hk"))
+      .groupBy(col("hk")).agg(count(lit(1)).as("df"))
+    // cached: BOTH the prefix extraction and the inverted index read
+    // this frame, and it is the entry's widest intermediate (|reps| ×
+    // tokens-per-doc rows) — uncached, Spark recomputes the explode +
+    // df join once per reference (~2× the index-build cost, measured
+    // r18 at 100×: 116 → 90 s from the cache alone; binary fp + hashed
+    // token keys take it further — see BASELINE.md round-18 addendum).
+    // Harness sweep owns the unpersist.
+    val tok = reps.select(col("fp"), col("n"), col("lang"), explode(col("toks")).as("t"))
+      .select(col("fp"), col("n"), xxhash64(col("lang"), col("t")).as("hk"))
+      .join(df, Seq("hk"))
+      .cache()
+    // prefix = the (floor(0.05 n) + 2) rarest tokens per rep, over the
+    // FULL token set (+2: +1 pigeonhole, +1 absorbs the double-compare
+    // boundary of the verify's inter/n >= 0.95). Never df-filtered: a
+    // fully-templated doc whose every token is common must still get
+    // candidates (a dropped-prefix variant measured recall 0.68 at
+    // sf0.001 - the misses were exactly the all-common-token docs).
+    // fp is lang-scoped 1:1, so partitioning by fp alone is lang-safe
+    val rankW = Window.partitionBy(col("fp"))
+      .orderBy(col("df"), col("hk"))
+    val prefix = tok
+      .withColumn("r", row_number().over(rankW))
+      .where(col("r") <= floor(col("n") * (1 - theta)) + 2)
+      .select(col("hk"), col("fp").as("fp_a"), col("n").as("n_a"))
+    // inverted index with CAPPED posting lists: each (lang, token)
+    // lists at most verifyMaxBucket reps, BIGGEST first (a container
+    // must hold >=0.95 of the probe's vocabulary, so large supersets
+    // are the likeliest witnesses) - rare-token postings stay complete
+    // (pigeonhole bound intact), stop-token postings are truncated
+    // rather than dropped, bounding candidates per prefix token while
+    // keeping template-heavy docs reachable
+    val postW = Window.partitionBy(col("hk"))
+      .orderBy(col("n").desc, col("fp"))
+    val index = tok
+      .withColumn("pr", row_number().over(postW))
+      .where(col("pr") <= dfCap)
+      .select(col("hk"), col("fp").as("fp_b"), col("n").as("n_b"))
+    // candidates: share a prefix token, container at least θ× the size;
+    // capped per contained rep, biggest container first (deterministic)
+    val capW = Window.partitionBy(col("fp_a"))
+      .orderBy(col("n_b").desc, col("fp_b"))
+    // size prune epsilon-slackened: the verify compares inter/n_a in
+    // double arithmetic, so the prune must not drop a boundary
+    // container the verify would keep (n_b >= inter always)
+    val cand = prefix.join(index, Seq("hk"))
+      .where(col("fp_a") =!= col("fp_b") && col("n_b") >= col("n_a") * (theta - 1e-9))
+      .select(col("fp_a"), col("n_a"), col("fp_b"), col("n_b"))
+      .distinct()
+      .withColumn("rk", row_number().over(capW))
+      .where(col("rk") <= candCap)
+    // dictionary-encoded verify (VERDICT r19 #4; `dictVerify = false` is
+    // the string spelling BitmaskPathSpec compares it with): when the
+    // rep-level (lang, token) vocabulary fits 2^16 (one scalar stats
+    // job), the verify frames carry sorted ARRAY<BIGINT> dictionary ids
+    // instead of the string arrays — the join-back shuffles 8 B elements
+    // and the per-candidate intersect is the primitive-long merge. The
+    // dictionary is a bijection (row_number over the observed pairs, no
+    // hashing), so intersect SIZES are identical to the string merge
+    // and the has_container output cannot move. explode_outer + left
+    // join + coalesce keep a hypothetical empty-token rep present with
+    // tids=[] (parity with the string path's empty-array intersect).
+    val dictOpt = if (!dictVerify) None else {
+      val vocab = reps.select(col("lang"), explode(col("toks")).as("t")).distinct()
+      if (vocab.count() > (1 << 16)) None // bounded driver action: one scalar
+      else Some(vocab.select(col("lang"), col("t"),
+        (row_number().over(Window.orderBy(col("lang"), col("t"))) - 1)
+          .cast("long").as("tid")))
+    }
+    val verifyReps = dictOpt match {
+      case Some(dict) =>
+        reps.select(col("fp"), col("lang"), explode_outer(col("toks")).as("t"))
+          .join(broadcast(dict), Seq("lang", "t"), "left")
+          .groupBy(col("fp"), col("lang"))
+          .agg(sort_array(collect_list(col("tid"))).as("vtoks"))
+      case None =>
+        reps.select(col("fp"), col("lang"), col("toks").as("vtoks"))
+    }
+    val ta = verifyReps.select(col("fp").as("fp_a"), col("lang").as("lang_a"),
+      col("vtoks").as("toks_a"))
+    val tb = verifyReps.select(col("fp").as("fp_b"), col("lang").as("lang_b"),
+      col("vtoks").as("toks_b"))
+    // both verify spellings bind the same column names; pick the long or
+    // string merge kernel to match the carried element type
+    val inter =
+      if (dictOpt.isDefined) expr("sorted_intersect_size_l(toks_a, toks_b)")
+      else expr("sorted_intersect_size(toks_a, toks_b)")
+    val contained = cand.join(ta, "fp_a").join(tb, "fp_b")
+      .where(col("lang_a") === col("lang_b") && inter * lit(1.0) / col("n_a") >= theta)
+      .select(col("fp_a")).distinct()
+      .withColumn("hit", lit(true))
+    // left join: a null-fp (null-text) member matches no group and no
+    // containment hit — coalesce gives it m=1 ⇒ has_container=false,
+    // exactly the blocked truth's treatment (it never pairs null text)
+    members
+      .join(groups.select(col("lang"), col("fp"), col("m")), Seq("lang", "fp"), "left")
+      .join(contained.withColumnRenamed("fp_a", "fp"), Seq("fp"), "left")
+      .select(col("doc_id"),
+        (coalesce(col("m"), lit(1L)) >= 2 ||
+          coalesce(col("hit"), lit(false))).as("has_container"))
+      .orderBy(col("doc_id"))
   }
 
   /** The composed training-data filter — what a user of this engine

@@ -245,28 +245,6 @@ object VectorQueries {
       .limit(10)
   }
 
-  /** Random-hyperplane (signed-random-projection) LSH ANN — the
-    * DATA-INDEPENDENT counterpart to [[ivfKnn]]: no centroid pass, no
-    * training; buckets come from sign(v·r) under deterministic
-    * pseudo-random hyperplanes, so new vectors index in O(1) without
-    * touching the corpus (the property IVF lacks when the corpus
-    * drifts). nTables hash tables of nBits each; a pair at angle θ
-    * agrees on one bit w.p. 1-θ/π, on a table w.p. (1-θ/π)^nBits, on
-    * ANY table w.p. 1-(1-(1-θ/π)^nBits)^nTables.
-    *
-    * Honest physics on THIS corpus: the query's true neighbours sit at
-    * ~70° (cos ≈ 0.3 — near-uniform random vectors), so useful recall
-    * needs wide probing: defaults (8 tables × 4 bits) scan ~40% of the
-    * corpus here. That is the real SRP trade at low similarity — the
-    * knobs scale as nBits ≈ log2(n / target_bucket) as the corpus
-    * grows, and corpora with actual near-dups (the dedup use case) sit
-    * on the cheap side of the S-curve. Recall vs brute force is
-    * property-tested, same floor as the IVF entry.
-    *
-    * Plan shape: ONE posexplode + groupBy pass computes all
-    * nTables×nBits projection sums codegen'd (the dedup_minhash_lsh
-    * signature trick — no interpreted HOF per plane); buckets
-    * broadcast-join against the query's. */
   /** Effective SRP bits per table for a corpus of n vectors: the
     * configured floor raised to ceil(log2(n / targetBucket)), capped at
     * 30. Pinning expected bucket occupancy makes co-bucket candidate
@@ -312,30 +290,60 @@ object VectorQueries {
         .head().getLong(0)
     }
 
-  private val lshAnn = CatalogEntry.noOracle("vec_lsh_ann") { (spark, sfDir) =>
-    VectorFunctions.ensureRegistered(spark)
-    val nTables = graft.GraftConf.lshAnnTables(spark)
-    val bits = srpEffectiveBits(spark, embCorpusCount(spark, sfDir))
-    val nPlanes = nTables * bits
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), vdouble(col("embedding")).as("v"))
-    // hyperplane component (plane p, dim i): xxhash64-derived uniform in
-    // [-1, 1] — deterministic, no stored model (Rademacher-ish is enough
-    // for SRP; Gaussianity is not required for the collision bound)
+  /** SRP signature tables: per id of `vecs` (columns `idCol`, `v`),
+    * `nTables` rows `(tbl, bucket)`, bucket = the sign bits of `bits`
+    * hyperplane projections packed into an int. ONE posexplode + groupBy
+    * pass computes all nTables×bits projection sums codegen'd (the MinHash
+    * signature trick of [[TextQueries.minhashSignature]] — no interpreted
+    * HOF per plane). Hyperplane component (plane p, dim i): xxhash64-
+    * derived uniform in [-1, 1] — deterministic, no stored model
+    * (Rademacher-ish is enough for SRP; Gaussianity is not required for
+    * the collision bound). */
+  private def srpTables(vecs: org.apache.spark.sql.DataFrame, idCol: String,
+      bits: Int, nTables: Int): org.apache.spark.sql.DataFrame = {
     def rcomp(p: Int): Column =
       (pmod(xxhash64(lit(p), col("pos")), lit(2001L)) - lit(1000L)) / lit(1000.0)
-    val sumExprs = (0 until nPlanes).map(p => sum(col("x") * rcomp(p)).as(s"s$p"))
-    val sigs = emb.select(col("vec_id"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("vec_id")).agg(sumExprs.head, sumExprs.tail: _*)
+    val sumExprs = (0 until nTables * bits).map(p => sum(col("x") * rcomp(p)).as(s"s$p"))
+    val sigs = vecs.select(col(idCol), posexplode(col("v")).as(Seq("pos", "x")))
+      .groupBy(col(idCol)).agg(sumExprs.head, sumExprs.tail: _*)
     val bucketCols = (0 until nTables).map { t =>
       (0 until bits).map { b =>
         when(col(s"s${t * bits + b}") >= 0, lit(1 << b)).otherwise(lit(0))
       }.reduce(_ + _).as(s"bkt$t")
     }
-    val tabled = sigs.select((col("vec_id") +: bucketCols): _*)
-      .select(col("vec_id"),
+    sigs.select((col(idCol) +: bucketCols): _*)
+      .select(col(idCol),
         posexplode(array((0 until nTables).map(t => col(s"bkt$t")): _*))
           .as(Seq("tbl", "bucket")))
+  }
+
+  /** Random-hyperplane (signed-random-projection) LSH ANN — the
+    * DATA-INDEPENDENT counterpart to [[ivfKnn]]: no centroid pass, no
+    * training; buckets come from sign(v·r) under deterministic
+    * pseudo-random hyperplanes, so new vectors index in O(1) without
+    * touching the corpus (the property IVF lacks when the corpus
+    * drifts). nTables hash tables of nBits each; a pair at angle θ
+    * agrees on one bit w.p. 1-θ/π, on a table w.p. (1-θ/π)^nBits, on
+    * ANY table w.p. 1-(1-(1-θ/π)^nBits)^nTables.
+    *
+    * Honest physics on THIS corpus: the query's true neighbours sit at
+    * ~70° (cos ≈ 0.3 — near-uniform random vectors), so useful recall
+    * needs wide probing: defaults (8 tables × 4 bits) scan ~40% of the
+    * corpus here. That is the real SRP trade at low similarity — the
+    * knobs scale as nBits ≈ log2(n / target_bucket) as the corpus
+    * grows, and corpora with actual near-dups (the dedup use case) sit
+    * on the cheap side of the S-curve. Recall vs brute force is
+    * property-tested, same floor as the IVF entry.
+    *
+    * Plan shape: the one-pass codegen'd [[srpTables]] signature
+    * aggregation; buckets broadcast-join against the query's. */
+  private val lshAnn = CatalogEntry.noOracle("vec_lsh_ann") { (spark, sfDir) =>
+    VectorFunctions.ensureRegistered(spark)
+    val nTables = graft.GraftConf.lshAnnTables(spark)
+    val bits = srpEffectiveBits(spark, embCorpusCount(spark, sfDir))
+    val emb = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), vdouble(col("embedding")).as("v"))
+    val tabled = srpTables(emb, "vec_id", bits, nTables)
     val qBuckets = tabled.where(col("vec_id") === 0)
       .select(col("tbl"), col("bucket"))
     val candIds = tabled.where(col("vec_id") =!= 0)
@@ -538,29 +546,6 @@ object VectorQueries {
     pqSearch(spark, sfDir, cents, codes)
   }
 
-  /** IVF-PQ — the production ANN composition: the IVF coarse quantizer
-    * (labels as cells, per-label mean centroids) prunes the corpus to
-    * nprobe cells, and RESIDUAL-encoded PQ codes answer within the probed
-    * cells. Residual encoding (r10, the standard FAISS accuracy lever):
-    * codes quantize v − centroid(cell(v)), not v — residuals cluster near
-    * the origin with the cross-cell variance already explained by the
-    * coarse quantizer, so the codebooks spend their M×K resolution on
-    * within-cell structure. The ADC is therefore PER CELL: the query's
-    * residual against each probed cell's centroid yields that cell's
-    * distance table (nprobe×M×K rows — tiny, broadcast), and each
-    * candidate is scored against its own cell's table, exactly how FAISS
-    * scans an IVF-PQ list. Only the ~50-row shortlist touches full
-    * vectors for the exact cosine rerank. The residual model is its own
-    * train-once artifact (see [[pqModel]]); `vec_pq_ann` keeps the raw
-    * model — un-routed queries have no cell to residualize against.
-    * Measured honestly (RecallAB, 10 queries, sf0.001): residual and raw
-    * codes score IDENTICAL 0.44 mean recall@10 here, because this
-    * corpus's labels are unclustered — per-cell centroids sit near the
-    * origin, so residual ≈ raw by construction. The lever only pays on
-    * clustered embeddings (every real corpus); the plan cost of carrying
-    * it is one extra sample-trained Lloyd pass. PropertySpec pins the
-    * MEAN recall floor over 10 queries — single-query recall@10 swings
-    * ±0.2 on this corpus and proves nothing. */
   /** Generalized IVF-PQ search — `qid` parameterizes the query vector so
     * PropertySpec can measure MEAN recall over many queries (single-query
     * recall@10 swings ±0.2 on this near-orthogonal corpus — too noisy to
@@ -616,6 +601,29 @@ object VectorQueries {
     }
   }
 
+  /** IVF-PQ — the production ANN composition: the IVF coarse quantizer
+    * (labels as cells, per-label mean centroids) prunes the corpus to
+    * nprobe cells, and RESIDUAL-encoded PQ codes answer within the probed
+    * cells. Residual encoding (r10, the standard FAISS accuracy lever):
+    * codes quantize v − centroid(cell(v)), not v — residuals cluster near
+    * the origin with the cross-cell variance already explained by the
+    * coarse quantizer, so the codebooks spend their M×K resolution on
+    * within-cell structure. The ADC is therefore PER CELL: the query's
+    * residual against each probed cell's centroid yields that cell's
+    * distance table (nprobe×M×K rows — tiny, broadcast), and each
+    * candidate is scored against its own cell's table, exactly how FAISS
+    * scans an IVF-PQ list. Only the ~50-row shortlist touches full
+    * vectors for the exact cosine rerank. The residual model is its own
+    * train-once artifact (see [[pqModel]]); `vec_pq_ann` keeps the raw
+    * model — un-routed queries have no cell to residualize against.
+    * Measured honestly (RecallAB, 10 queries, sf0.001): residual and raw
+    * codes score IDENTICAL 0.44 mean recall@10 here, because this
+    * corpus's labels are unclustered — per-cell centroids sit near the
+    * origin, so residual ≈ raw by construction. The lever only pays on
+    * clustered embeddings (every real corpus); the plan cost of carrying
+    * it is one extra sample-trained Lloyd pass. PropertySpec pins the
+    * MEAN recall floor over 10 queries — single-query recall@10 swings
+    * ±0.2 on this corpus and proves nothing. */
   private val ivfPq = CatalogEntry.noOracle("vec_ivf_pq") { (spark, sfDir) =>
     ivfPqTopK(spark, sfDir, qid = 0L, residual = true)
   }
@@ -1356,39 +1364,6 @@ object VectorQueries {
       .orderBy(col("src"), col("rn"))
   }
 
-  /** k-NN graph via SRP-LSH candidate generation — the 100-TB SCALE PATH
-    * that [[knnGraph]]'s scaladoc promises (that entry is the exact
-    * all-pairs ground-truth twin; this one builds the same per-node top-k
-    * edge list from co-bucketed candidates only). Pipeline: the one-pass
-    * codegen'd SRP signature aggregation from [[lshAnn]] (nTables×nBits
-    * projection sums, deterministic xxhash64 hyperplanes — no stored
-    * model) → co-bucket pairs per (table, bucket) deduped across tables →
-    * exact cosine rerank of candidates → per-src ROW_NUMBER top-5. Work is
-    * candidate-linear in bucket sizes — no all-pairs product ever forms,
-    * and bucket width now AUTO-TUNES with corpus size (srpEffectiveBits
-    * pins expected occupancy, so candidate pairs grow linearly in n — the
-    * round-12 scale proof is the receipt).
-    * Honest physics on THIS near-orthogonal corpus (same note as lshAnn):
-    * true neighbors sit at ~70°, so 8×4-bit tables leave wide buckets —
-    * corpora with genuine near-dup structure sit on the cheap side of the
-    * SRP S-curve. No oracle (bucketing is probabilistic by design);
-    * PropertySpec pins mean per-node edge recall vs the exact twin.
-    *
-    * Canonicalize-first (r15 100× fix): occupancy pinning bounds bucket
-    * width for DISTINCT vectors, but identical vectors share the exact
-    * signature in EVERY table — no number of bits can split them, so a
-    * corpus with g-deep exact-duplicate embedding groups (the norm in web
-    * corpora: duplicate docs → identical embeddings) made the co-bucket
-    * self-join quadratic in g (measured at the 100× leg: 100-deep groups
-    * → 413 s vs a ~4 s base). Same playbook as the text dedup family:
-    * group identical vectors by a (xxhash64, murmur) pair over the value,
-    * run SRP + rerank on one representative per group (candidate pairs
-    * linear again), then fan the graph back out with BOUNDED per-group
-    * id prefixes — a member's true top-k starts with its g−1 duplicate
-    * siblings at cosine exactly 1.0 (tie-break id ASC, so the 6 smallest
-    * member ids cover every member's 5 sibling slots), then the rep-level
-    * neighbors' smallest-id members. For an all-distinct corpus (every
-    * group a singleton) this reduces exactly to the previous pipeline. */
   /** Shared SRP candidate machinery for [[knnGraphLsh]]'s two branches:
     * per-id signatures over `nTables` tables of `bits` hyperplanes, the
     * co-bucket candidate self-join, and the exact-cosine rerank input.
@@ -1396,21 +1371,7 @@ object VectorQueries {
     * each endpoint ranks the other among ITS neighbors. */
   private def srpSimPairs(vecs: org.apache.spark.sql.DataFrame,
       bits: Int, nTables: Int): org.apache.spark.sql.DataFrame = {
-    val nPlanes = nTables * bits
-    def rcomp(p: Int): Column =
-      (pmod(xxhash64(lit(p), col("pos")), lit(2001L)) - lit(1000L)) / lit(1000.0)
-    val sumExprs = (0 until nPlanes).map(p => sum(col("x") * rcomp(p)).as(s"s$p"))
-    val sigs = vecs.select(col("id"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("id")).agg(sumExprs.head, sumExprs.tail: _*)
-    val bucketCols = (0 until nTables).map { t =>
-      (0 until bits).map { b =>
-        when(col(s"s${t * bits + b}") >= 0, lit(1 << b)).otherwise(lit(0))
-      }.reduce(_ + _).as(s"bkt$t")
-    }
-    val tabled = sigs.select((col("id") +: bucketCols): _*)
-      .select(col("id"),
-        posexplode(array((0 until nTables).map(t => col(s"bkt$t")): _*))
-          .as(Seq("tbl", "bucket")))
+    val tabled = srpTables(vecs, "id", bits, nTables)
     val cand = tabled.as("a")
       .join(tabled.as("b"),
         col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
@@ -1462,6 +1423,39 @@ object VectorQueries {
   private[graft] def embAllDistinct(spark: SparkSession, sfDir: String): Boolean =
     embDistinctCount(spark, sfDir) >= (0.98 * embCorpusCount(spark, sfDir)).toLong
 
+  /** k-NN graph via SRP-LSH candidate generation — the 100-TB SCALE PATH
+    * that [[knnGraph]]'s scaladoc promises (that entry is the exact
+    * all-pairs ground-truth twin; this one builds the same per-node top-k
+    * edge list from co-bucketed candidates only). Pipeline: the one-pass
+    * codegen'd SRP signature aggregation of [[srpTables]] (nTables×nBits
+    * projection sums, deterministic xxhash64 hyperplanes — no stored
+    * model) → co-bucket pairs per (table, bucket) deduped across tables →
+    * exact cosine rerank of candidates → per-src ROW_NUMBER top-5. Work is
+    * candidate-linear in bucket sizes — no all-pairs product ever forms,
+    * and bucket width now AUTO-TUNES with corpus size (srpEffectiveBits
+    * pins expected occupancy, so candidate pairs grow linearly in n — the
+    * round-12 scale proof is the receipt).
+    * Honest physics on THIS near-orthogonal corpus (same note as lshAnn):
+    * true neighbors sit at ~70°, so 8×4-bit tables leave wide buckets —
+    * corpora with genuine near-dup structure sit on the cheap side of the
+    * SRP S-curve. No oracle (bucketing is probabilistic by design);
+    * PropertySpec pins mean per-node edge recall vs the exact twin.
+    *
+    * Canonicalize-first (r15 100× fix): occupancy pinning bounds bucket
+    * width for DISTINCT vectors, but identical vectors share the exact
+    * signature in EVERY table — no number of bits can split them, so a
+    * corpus with g-deep exact-duplicate embedding groups (the norm in web
+    * corpora: duplicate docs → identical embeddings) made the co-bucket
+    * self-join quadratic in g (measured at the 100× leg: 100-deep groups
+    * → 413 s vs a ~4 s base). Same playbook as the text dedup family:
+    * group identical vectors by a (xxhash64, murmur) pair over the value,
+    * run SRP + rerank on one representative per group (candidate pairs
+    * linear again), then fan the graph back out with BOUNDED per-group
+    * id prefixes — a member's true top-k starts with its g−1 duplicate
+    * siblings at cosine exactly 1.0 (tie-break id ASC, so the 6 smallest
+    * member ids cover every member's 5 sibling slots), then the rep-level
+    * neighbors' smallest-id members. For an all-distinct corpus (every
+    * group a singleton) this reduces exactly to the previous pipeline. */
   private val knnGraphLsh = CatalogEntry.noOracle("vec_knn_graph_lsh") { (spark, sfDir) =>
     VectorFunctions.ensureRegistered(spark)
     val nTables = graft.GraftConf.lshAnnTables(spark)

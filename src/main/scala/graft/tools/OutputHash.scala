@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{Catalog, GraftSession, SparkEntry}
 
 /** Canonical output fingerprint for A/B-ing no-oracle entries across
   * refactors (the DistinctValue helper extraction must be bit-identical):
@@ -8,7 +8,8 @@ import graft.{GraftSession, SparkEntry}
   * fold of the row strings. Two trees printing the same line for a key
   * produced the SAME multiset of rows.
   *
-  * Usage: runMain graft.tools.OutputHash <sfDir> key1 key2 ...
+  * Usage: runMain graft.tools.OutputHash <sfDir> [key1 key2 ...]
+  * With no keys it hashes every no-oracle entry of the catalog.
   */
 object OutputHash {
   def main(args: Array[String]): Unit = {
@@ -16,7 +17,9 @@ object OutputHash {
     val cpus = GraftSession.localCores
     val spark = GraftSession.builder(s"local[$cpus]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    args.drop(1).foreach { key =>
+    val keys = if (args.length > 1) args.drop(1).toSeq
+      else Catalog.all.filter(_.duckdbSql.isEmpty).map(_.key)
+    keys.foreach { key =>
       val df = SparkEntry.queries(key)(spark, sfDir)
       val rows = df.orderBy(df.columns.map(org.apache.spark.sql.functions.col): _*)
         .collect()

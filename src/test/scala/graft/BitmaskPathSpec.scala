@@ -1,14 +1,20 @@
 package graft
 
+import graft.queries.TextQueries
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** r19: the token-set pair entries (dedup_containment,
   * text_jaccard_tokens) pick between an adaptive 64-bit-bitmask encoding
   * and the general sorted-array spelling by the corpus' counted global
-  * vocabulary (GraftConf.tokenBitmask). The two physical paths must be
-  * output-IDENTICAL — this spec pins that three ways:
+  * vocabulary (TextQueries.tokenMasks); dedup_ngram_jaccard and
+  * dedup_containment_prefix pick dictionary-id encodings the same way.
+  * The two physical paths must be output-IDENTICAL — this spec pins that
+  * three ways:
   *
-  *  1. on the graded corpus (31-token vocabulary → mask path taken),
-  *     auto vs off produce equal sorted outputs for both entries;
-  *  2. on a >64-vocab fixture the auto path must FALL BACK (the mask
+  *  1. on the graded corpus (31-token vocabulary → encoded path taken),
+  *     the entry and a direct call to its general-path builder produce
+  *     equal sorted outputs;
+  *  2. on a >64-vocab fixture the entry must FALL BACK (the mask
   *     encoding would be lossy there — two tokens per bit);
   *  3. the fallback's output equals the general path's (trivially — it
   *     IS the general path — asserted by comparing collected row outputs
@@ -19,26 +25,20 @@ class BitmaskPathSpec extends SparkSpecBase {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+  private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
 
-  /** Conf knobs must not leak into the shared session when an assertion
-    * inside `body` throws (ADVICE r19) — always-unset via finally. */
-  private def withConf[A](knob: String, value: String)(body: => A): A = {
-    spark.conf.set(knob, value)
-    try body finally spark.conf.unset(knob)
-  }
-
-  for ((key, knob) <- Seq(
-      "dedup_containment" -> "graft.text.tokenBitmask",
-      "text_jaccard_tokens" -> "graft.text.tokenBitmask",
-      "dedup_ngram_jaccard" -> "graft.text.gramDict",
+  for ((key, general) <- Seq[(String, (SparkSession, String) => DataFrame)](
+      "dedup_containment" -> TextQueries.containmentGeneral,
+      "text_jaccard_tokens" -> TextQueries.jaccardTokensGeneral,
+      "dedup_ngram_jaccard" -> TextQueries.ngramJaccardGeneral,
       // r20: the prefix twin's dictionary-encoded verify (long-id arrays)
       // must match the string verify row for row
-      "dedup_containment_prefix" -> "graft.text.prefixDict")) {
+      "dedup_containment_prefix" ->
+        ((s, d) => TextQueries.containmentPrefixFlags(s, d, dictVerify = false)))) {
     test(s"$key: encoded path (auto) equals general path (off) on the graded corpus") {
-      val fast = withConf(knob, "auto")(rows(Catalog.byKey(key).run(spark, sf)))
-      val slow = withConf(knob, "off")(rows(Catalog.byKey(key).run(spark, sf)))
+      val fast = rows(Catalog.byKey(key).run(spark, sf))
+      val slow = rows(general(spark, sf))
       assert(fast == slow, s"$key: encoded and general paths diverge")
       assert(fast.nonEmpty, s"$key produced no rows at sf0.001")
     }
@@ -62,12 +62,15 @@ class BitmaskPathSpec extends SparkSpecBase {
       StructField("n_chars", LongType)))
     spark.createDataFrame(spark.sparkContext.parallelize(data, 2), schema)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    for (mode <- Seq("auto", "off")) withConf("graft.text.tokenBitmask", mode) {
-      val cont = Catalog.byKey("dedup_containment").run(spark, dir).collect()
+    type Build = (SparkSession, String) => DataFrame
+    for ((mode, containment, jaccard) <- Seq[(String, Build, Build)](
+        ("auto", Catalog.byKey("dedup_containment").run, Catalog.byKey("text_jaccard_tokens").run),
+        ("off", TextQueries.containmentGeneral, TextQueries.jaccardTokensGeneral))) {
+      val cont = containment(spark, dir).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       assert(cont == Seq((0L, 1L, 1L), (1L, 1L, 1L), (2L, 0L, 0L), (3L, 0L, 0L)),
         s"containment null-text contract broken under $mode: ${cont.mkString(",")}")
-      val jac = Catalog.byKey("text_jaccard_tokens").run(spark, dir).collect()
+      val jac = jaccard(spark, dir).collect()
         .map(r => (r.getLong(0), r.getLong(1),
           if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSeq
       // all 6 blocked pairs emitted; pairs touching a null-text doc carry
@@ -91,9 +94,8 @@ class BitmaskPathSpec extends SparkSpecBase {
       StructField("n_chars", LongType)))
     spark.createDataFrame(spark.sparkContext.parallelize(rows80, 2), schema)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val auto = withConf("graft.text.tokenBitmask", "auto")(
-      rows(Catalog.byKey("dedup_containment").run(spark, dir)))
-    val general = rows(graft.queries.TextQueries.containmentGeneral(spark, dir))
+    val auto = rows(Catalog.byKey("dedup_containment").run(spark, dir))
+    val general = rows(TextQueries.containmentGeneral(spark, dir))
     assert(auto == general, "auto did not match the general path on >64 vocab")
     // every doc shares token 'common' (81-token vocab): with 2-token sets,
     // 0.95-containment needs the full set, so n_containers = n_supersets = 0

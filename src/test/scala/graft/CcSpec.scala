@@ -148,4 +148,48 @@ class CcSpec extends SparkSpecBase {
         s"component $comp labeled above its min member ${members.keys.min}")
     }
   }
+
+  test("chainNeighbours pairs each row with its next two inside its partition only") {
+    // partitions of 5, 3, 2 and 1 rows; ord is a permutation so the
+    // expected order is known, and rows arrive shuffled across 3 slices
+    val sizes = Seq("a" -> 5, "b" -> 3, "c" -> 2, "d" -> 1)
+    val rows = for ((p, m) <- sizes; k <- 0 until m)
+      yield (p, ((k * 7) % m).toLong, s"$p$k")
+    val session = spark
+    import session.implicits._
+    val df = spark.sparkContext.parallelize(new scala.util.Random(7).shuffle(rows), 3)
+      .toDF("p", "ord", "id")
+    val got = graft.queries.TextQueries.chainNeighbours(df, Seq(col("p")),
+        Seq(col("ord")), Seq("id", "p"))
+      .collect().map(r => (r.getAs[String]("p"), r.getAs[String]("id"),
+        r.getAs[String]("nb_p"), r.getAs[String]("nb_id"))).toSeq
+    assert(got.forall { case (p, _, nbp, _) => p == nbp }, s"pair across partitions: $got")
+    val expected = sizes.flatMap { case (p, m) =>
+      val sorted = rows.filter(_._1 == p).sortBy(_._2).map(_._3)
+      (1 to 2).flatMap(k => sorted.zip(sorted.drop(k))).map { case (x, y) => (p, x, p, y) }
+    }
+    assert(got.sorted == expected.sorted, s"got ${got.sorted}, want ${expected.sorted}")
+    sizes.foreach { case (p, m) =>
+      assert(got.count(_._1 == p) == math.max(0, 2 * m - 3), s"partition $p of $m rows")
+    }
+  }
+
+  test("minhashSignature equals the driver-side min of XxHash64(seed, element)") {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    val sets = Seq[(Long, Seq[String])](1L -> Seq("a", "b", "c"), 2L -> Seq("b"),
+      3L -> Seq("x", "y", "a", "b", "z"), 4L -> Seq(), 5L -> null)
+    val nHashes = 8
+    val session = spark
+    import session.implicits._
+    val df = spark.sparkContext.parallelize(sets, 2).toDF("id", "toks")
+    val got = graft.queries.TextQueries.minhashSignature(df, "id", "toks", nHashes, Some("n"))
+      .collect().map(r => r.getAs[Long]("id") ->
+        ((0 until nHashes).map(i => r.getAs[Long](s"h$i")) :+ r.getAs[Long]("n"))).toMap
+    val expected = sets.collect { case (id, toks) if toks != null && toks.nonEmpty =>
+      id -> ((0 until nHashes).map(i => toks.map(t =>
+        new XxHash64(Seq(Literal(i), Literal(t))).eval().asInstanceOf[Long]).min) :+ toks.size.toLong)
+    }.toMap
+    // null and empty sets have no signature
+    assert(got == expected, s"got $got, want $expected")
+  }
 }

@@ -853,9 +853,14 @@ class PlanShapeSpec extends SparkSpecBase {
     // the encode memo is cold and the parquet schema is already known
     val docs = Tables.documents(spark, sfDir)
     docs.cache(); docs.count()
-    // runs the entry in a fresh session; returns the output, the executed
+    // the two encodings: the entry (mask path on this corpus) and the
+    // general sorted-array builder
+    val builds = Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
+      "mask" -> Catalog.byKey("dedup_containment").run,
+      "general" -> graft.queries.TextQueries.containmentGeneral)
+    // runs a build in a fresh session; returns the output, the executed
     // plan and the number of jobs the builder ran
-    def run(confs: (String, String)*): (Seq[String], SparkPlan, Int) = {
+    def run(path: String, confs: (String, String)*): (Seq[String], SparkPlan, Int) = {
       val session = spark.newSession()
       confs.foreach { case (k, v) => session.conf.set(k, v) }
       val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -865,7 +870,7 @@ class PlanShapeSpec extends SparkSpecBase {
       }
       spark.sparkContext.addSparkListener(listener)
       val df = try {
-        val d = Catalog.byKey("dedup_containment").run(session, sfDir)
+        val d = builds(path)(session, sfDir)
         org.apache.spark.ListenerBusDrain(spark.sparkContext)
         d
       } finally spark.sparkContext.removeSparkListener(listener)
@@ -876,9 +881,9 @@ class PlanShapeSpec extends SparkSpecBase {
     try {
       // both encodings, at Spark's default broadcast threshold (the sf0.001
       // documents fit it, so the broadcast plan runs)
-      val outs = for ((mode, maxJobs) <- Seq("auto" -> 1, "off" -> 0)) yield {
-        val (out, plan, built) = run("graft.text.tokenBitmask" -> mode)
-        val tag = s"tokenBitmask=$mode"
+      val outs = for ((path, maxJobs) <- Seq("mask" -> 1, "general" -> 0)) yield {
+        val (out, plan, built) = run(path)
+        val tag = s"$path path"
         // the mask builder's only job is the token dictionary (the load
         // reuses the table's schema and the mask frame is cached lazily);
         // the general path's builder runs none
@@ -924,12 +929,11 @@ class PlanShapeSpec extends SparkSpecBase {
       assert(outs(0) == outs(1), "mask and general paths disagree")
       // with size-based broadcasts off, both paths fall back to Spark's own
       // join choice: nothing is broadcast, and the output is unchanged
-      for (mode <- Seq("auto", "off")) {
-        val (out, plan, _) = run("graft.text.tokenBitmask" -> mode,
-          "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      for (path <- Seq("mask", "general")) {
+        val (out, plan, _) = run(path, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
         assert(aqe.collect(plan) { case b: BroadcastExchangeLike => b }.isEmpty,
-          s"tokenBitmask=$mode: broadcast despite autoBroadcastJoinThreshold=-1:\n$plan")
-        assert(out == outs(0), s"tokenBitmask=$mode: fallback plan changed the output")
+          s"$path path: broadcast despite autoBroadcastJoinThreshold=-1:\n$plan")
+        assert(out == outs(0), s"$path path: fallback plan changed the output")
       }
     } finally docs.unpersist(blocking = true)
   }
