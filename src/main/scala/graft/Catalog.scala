@@ -40,7 +40,7 @@ object CatalogEntry {
     * recursive CTEs, and UNION ALL closure diverges on cyclic graphs).
     * The driver still gets the full DuckDB hash-compare; the in-repo
     * equivalence check lives in a dedicated spec (exempted, with
-    * justification, from SelfCheckSpec's twin-coverage test). */
+    * justification, from the conformance harness's twin-coverage test). */
   def duckdbOnly(key: String, duckdb: String)(
       run: (SparkSession, String) => DataFrame): CatalogEntry =
     CatalogEntry(key, Some(duckdb), None, run)

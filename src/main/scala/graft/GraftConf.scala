@@ -213,8 +213,8 @@ object GraftConf {
     * row order), so partitioning cannot move any checked output; the
     * sf0.001+sf0.01 verify gates were re-run green under the active floor
     * before this shipped, SortTotalityAudit flags zero under-determined
-    * final sorts, and RepartitionInvarianceSpec pins representative
-    * entries equal under auto vs off. */
+    * final sorts, and the conformance harness (ConformanceSpec.scala)
+    * pins every entry's output equal under auto, 7 and 0. */
   def tablesMinParallelism(spark: SparkSession): Int =
     get(spark, "graft.tables.minParallelism", "auto") match {
       case "auto" =>

@@ -535,7 +535,7 @@ object ScanQueries {
     * per-session key makes a sibling restage tables another session has
     * already resolved — its per-session relation cache then points at
     * part-files the rewrite deleted (FILE_NOT_EXIST; hit by
-    * PerturbationSpec's sibling-session run). One staging per (JVM, sfDir)
+    * the conformance harness's sibling-session runs). One staging per (JVM, sfDir)
     * is both the fastest and the only cache-coherent choice (which is why
     * the staged sets are JVM-scoped and not in [[graft.SessionMemo]]); the
     * staging session refreshes its own relation cache after a rewrite. */

@@ -1402,7 +1402,7 @@ object TextQueries {
     * recursion is unsupported (`UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE`,
     * verified against 4.1.2) and UNION ALL closure diverges on cycles —
     * so the in-repo equivalence check is CcSpec's union-find ground
-    * truth rather than a SelfCheckSpec SQL twin.
+    * truth rather than a self-check SQL twin.
     *
     * Scale shape: min-label propagation with pointer jumping —
     * alternate propagate (adopt the min label across edges) and
@@ -2825,8 +2825,8 @@ object TextQueries {
     * emits the merge table) and `pipeline_bpe_apply` (which tokenizes with
     * it — deterministic trainer, so the two entries always agree). Trained
     * once per (session, sfDir, nMerges) in [[graft.SessionMemo]]: the
-    * trainer is deterministic and partition-invariant (BpeSpec +
-    * PerturbationSpec), so sharing the learned merges between the two
+    * trainer is deterministic and partition-invariant (BpeSpec + the
+    * conformance harness), so sharing the learned merges between the two
     * entries within one session changes nothing but the second entry's
     * cost. */
   private def trainBpe(spark: org.apache.spark.sql.SparkSession, sfDir: String,

@@ -86,8 +86,12 @@ object Util {
     * has to happen harness-side after evaluation, not in a try/finally
     * inside the entry. Blocks are freed; CacheManager registrations stay,
     * so a later identical plan (the shared PQ model) transparently
-    * re-materializes instead of breaking. */
-  def sweepEntryCaches(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+    * re-materializes instead of breaking. `keep` names RDD ids that stay
+    * cached (a harness's warmed tables); `blocking` waits for the blocks
+    * to be freed, so none survive into a timed region that follows. */
+  def sweepEntryCaches(spark: org.apache.spark.sql.SparkSession,
+      keep: Set[Int] = Set.empty, blocking: Boolean = false): Unit =
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!keep(id)) rdd.unpersist(blocking)
+    }
 }

@@ -549,13 +549,13 @@ object VectorQueries {
   /** Generalized IVF-PQ search — `qid` parameterizes the query vector so
     * PropertySpec can measure MEAN recall over many queries (single-query
     * recall@10 swings ±0.2 on this near-orthogonal corpus — too noisy to
-    * pin a floor on); `residual` switches raw-code scoring vs per-cell
-    * residual ADC so the A/B stays testable in-repo. */
+    * pin a floor on). Codes are residual-encoded and scored by per-cell
+    * ADC (see [[ivfPq]]). */
   private[graft] def ivfPqTopK(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, qid: Long, residual: Boolean)
+      sfDir: String, qid: Long)
       : org.apache.spark.sql.DataFrame = {
     VectorFunctions.ensureRegistered(spark)
-    val (cents, codes) = pqModel(spark, sfDir, residual)
+    val (cents, codes) = pqModel(spark, sfDir, residual = true)
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("label"), vdouble(col("embedding")).as("v"))
     val cellCentroids = cellCentroidsOf(spark, sfDir)
@@ -572,33 +572,28 @@ object VectorQueries {
       .where(col("vec_id") =!= qid && col("vec_id") =!= 0 &&
         col("label").isin(probeLabels: _*))
       .select(col("vec_id"), col("label"))
-    if (!residual)
-      pqSearch(spark, sfDir, cents,
-        codes.join(members.select(col("vec_id")), "vec_id"), qid)
-    else {
-      // per-cell ADC: query residual vs each probed cell's centroid
-      val qr = cellCentroids.where(col("label").isin(probeLabels: _*))
-        .crossJoin(broadcast(q))
-        .select(col("label"),
-          posexplode(pqSlices(zip_with(col("qv"), col("cv"), (a, b) => a - b)))
-            .as(Seq("s", "qsv")))
-      val adc = qr.join(cents, "s")
-        .select(col("label"), col("s"), col("c"), l2(col("qsv"), col("cent")).as("qd"))
-      val shortlist = codes.join(members, "vec_id")
-        .join(broadcast(adc), Seq("label", "s", "c"))
-        .groupBy(col("vec_id"))
-        .agg(collect_list(struct(col("s").as("s"), col("qd").as("qd"))).as("ds"))
-        .select(col("vec_id"),
-          round(aggregate(transform(array_sort(col("ds")), e => e.getField("qd")),
-            lit(0.0), (acc, x) => acc + x), 4).as("adist"))
-        .orderBy(col("adist"), col("vec_id"))
-        .limit(50)
-      shortlist.join(emb.where(col("vec_id") =!= qid), "vec_id")
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"), round(expr("cosine_sim(qv, v)"), 4).as("sim"))
-        .orderBy(col("sim").desc, col("vec_id"))
-        .limit(10)
-    }
+    // per-cell ADC: query residual vs each probed cell's centroid
+    val qr = cellCentroids.where(col("label").isin(probeLabels: _*))
+      .crossJoin(broadcast(q))
+      .select(col("label"),
+        posexplode(pqSlices(zip_with(col("qv"), col("cv"), (a, b) => a - b)))
+          .as(Seq("s", "qsv")))
+    val adc = qr.join(cents, "s")
+      .select(col("label"), col("s"), col("c"), l2(col("qsv"), col("cent")).as("qd"))
+    val shortlist = codes.join(members, "vec_id")
+      .join(broadcast(adc), Seq("label", "s", "c"))
+      .groupBy(col("vec_id"))
+      .agg(collect_list(struct(col("s").as("s"), col("qd").as("qd"))).as("ds"))
+      .select(col("vec_id"),
+        round(aggregate(transform(array_sort(col("ds")), e => e.getField("qd")),
+          lit(0.0), (acc, x) => acc + x), 4).as("adist"))
+      .orderBy(col("adist"), col("vec_id"))
+      .limit(50)
+    shortlist.join(emb.where(col("vec_id") =!= qid), "vec_id")
+      .crossJoin(broadcast(q))
+      .select(col("vec_id"), round(expr("cosine_sim(qv, v)"), 4).as("sim"))
+      .orderBy(col("sim").desc, col("vec_id"))
+      .limit(10)
   }
 
   /** IVF-PQ — the production ANN composition: the IVF coarse quantizer
@@ -616,16 +611,16 @@ object VectorQueries {
     * vectors for the exact cosine rerank. The residual model is its own
     * train-once artifact (see [[pqModel]]); `vec_pq_ann` keeps the raw
     * model — un-routed queries have no cell to residualize against.
-    * Measured honestly (RecallAB, 10 queries, sf0.001): residual and raw
-    * codes score IDENTICAL 0.44 mean recall@10 here, because this
-    * corpus's labels are unclustered — per-cell centroids sit near the
+    * Measured over 10 queries at sf0.001 against a raw-code arm (since
+    * removed): residual and raw codes scored IDENTICAL 0.44 mean recall@10
+    * here, because this corpus's labels are unclustered — per-cell centroids sit near the
     * origin, so residual ≈ raw by construction. The lever only pays on
     * clustered embeddings (every real corpus); the plan cost of carrying
     * it is one extra sample-trained Lloyd pass. PropertySpec pins the
     * MEAN recall floor over 10 queries — single-query recall@10 swings
     * ±0.2 on this corpus and proves nothing. */
   private val ivfPq = CatalogEntry.noOracle("vec_ivf_pq") { (spark, sfDir) =>
-    ivfPqTopK(spark, sfDir, qid = 0L, residual = true)
+    ivfPqTopK(spark, sfDir, qid = 0L)
   }
 
   /** Threshold range search — ANN's other query shape: ALL corpus vectors

@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.{Bench, GraftSession, SparkEntry, Tables}
+import graft.{Bench, GraftSession, SparkEntry}
+import graft.queries.Util
 
 /** Single-rep 100×-coverage cliff sweep (r17) — dev tool.
   *
@@ -23,15 +24,12 @@ object CoverageSweep {
     val spark = GraftSession.builder(s"local[$cpus]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val cached = Tables.names.map { n =>
-      val df = Tables.load(spark, dir, n); df.cache(); df.count(); df
-    }
+    val tables = ScaleProof.cacheTables(spark, dir)
     // single-thread CPU calib (Bench's): printed before and after so a
     // sweep taken in a degraded host window is adjudicable
     println(f"[cov] calib_start=${Bench.calibSeconds()}%.3f s")
     args.foreach { key =>
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      cached.foreach(_.cache()); cached.foreach(_.count())
+      Util.sweepEntryCaches(spark, tables)
       System.gc()
       val t0 = System.nanoTime()
       try {

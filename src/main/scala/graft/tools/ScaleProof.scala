@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.{Bench, GraftSession, SparkEntry, Tables}
+import graft.queries.Util
 
 /** Same-JVM scale measurement (VERDICT r11 #1; phased mode r15) — dev tool.
   *
@@ -44,18 +45,11 @@ object ScaleProof {
     spark.sparkContext.setLogLevel("WARN")
 
     if (!phased) {
-      val cached = Seq(base, synth).flatMap { dir =>
-        Tables.names.map { n =>
-          val df = Tables.load(spark, dir, n); df.cache(); df.count(); df
-        }
-      }
+      val tables = cacheTables(spark, base) ++ cacheTables(spark, synth)
 
       def time(key: String, dir: String): Double = {
         // sweep entry-internal persists, but NOT the warmed table cache
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        cached.foreach(_.cache())
-        cached.foreach(_.count())
+        Util.sweepEntryCaches(spark, tables)
         val t0 = System.nanoTime()
         try {
           val n = SparkEntry.queries(key)(spark, dir).queryExecution.toRdd.count()
@@ -89,14 +83,9 @@ object ScaleProof {
     } else {
       // ---- phased mode ----
       def runPhase(dir: String, label: String): Map[String, Double] = {
-        val cached = Tables.names.map { n =>
-          val df = Tables.load(spark, dir, n); df.cache(); df.count(); df
-        }
+        val tables = cacheTables(spark, dir)
         def time(key: String): Double = {
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-          cached.foreach(_.cache())
-          cached.foreach(_.count())
+          Util.sweepEntryCaches(spark, tables)
           System.gc()
           val t0 = System.nanoTime()
           try {
@@ -117,8 +106,7 @@ object ScaleProof {
           key -> math.min(r1, r2)
         }.toMap
         // release this phase's corpus entirely before the next
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        Util.sweepEntryCaches(spark, blocking = true)
         spark.sqlContext.clearCache()
         System.gc()
         println(f"[scale] phase $label done, calib=${Bench.calibSeconds()}%.3f s")
@@ -133,5 +121,16 @@ object ScaleProof {
       }
     }
     spark.stop()
+  }
+
+  /** Cache and count every table of `dir`; returns the ids of the RDDs
+    * that hold them, for the sweeps to keep. */
+  private[tools] def cacheTables(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Set[Int] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Tables.names.foreach { n =>
+      val df = Tables.load(spark, dir, n); df.cache(); df.count()
+    }
+    spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
   }
 }

@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.functions._
 
@@ -11,16 +13,39 @@ import graft.{Catalog, GraftSession}
   * duplicate (l_orderkey, l_linenumber) pairs), so their row order — and
   * the driver's ordered hash compare — silently depended on single-
   * partition scan order. Luck-based PASSes are not acceptable evidence,
-  * so this tool checks every oracle-checked entry MECHANICALLY: find the
-  * topmost Sort of the analyzed plan, group the output by the sort keys,
-  * and flag any entry where a tie group contains more than one DISTINCT
-  * row (identical duplicate rows are order-irrelevant to a value
-  * compare). Output: one line per flagged entry; exit count in the
-  * summary line.
+  * so every oracle-checked entry is checked MECHANICALLY by [[tieGroups]].
+  * The suite runs the check at sf0.001 (`sort-total: <key>` in
+  * ConformanceSpec); this main runs it at any SF. Output: one line per
+  * flagged entry; exit count in the summary line.
   *
   * Usage: runMain graft.tools.SortTotalityAudit [sfDir]
   */
 object SortTotalityAudit {
+
+  /** Find the topmost Sort of `df`'s analyzed plan, group `df`'s output
+    * rows, read from `out` (`df` itself, or a local relation over rows
+    * already collected from it), by the sort keys, and count the tie
+    * groups that contain more than one DISTINCT row (identical duplicate
+    * rows are order-irrelevant to a value compare). None when the plan
+    * has no Sort. Throws when a key cannot be re-expressed over the
+    * output: SortOrder.child.sql round-trips through the parser (Spark 4
+    * removed the Column(Expression) constructor), so keys that reference
+    * pruned sub-plan attributes do not resolve. Keys are resolved by
+    * column name alone, as a local relation carries no scan qualifiers. */
+  def tieGroups(df: DataFrame, out: DataFrame): Option[Long] =
+    df.queryExecution.analyzed.collectFirst { case s: Sort => s }.map { s =>
+      val keys = s.order.zipWithIndex.map { case (o, i) =>
+        expr(o.child.transform { case a: AttributeReference => a.withQualifier(Nil) }.sql)
+          .as(s"k$i")
+      }
+      val allCols = struct(out.columns.map(col).toIndexedSeq: _*)
+      out.select(keys :+ allCols.as("row"): _*)
+        .groupBy(keys.indices.map(i => col(s"k$i")): _*)
+        .agg(countDistinct(col("row")).as("nd"))
+        .where(col("nd") > 1)
+        .count()
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
@@ -31,24 +56,10 @@ object SortTotalityAudit {
     Catalog.stamped.filter(_.duckdbSql.isDefined).foreach { e =>
       try {
         val df = e.run(spark, sfDir)
-        df.queryExecution.analyzed.collectFirst { case s: Sort => s } match {
+        tieGroups(df, df) match {
           case None => noSort += 1
-          case Some(s) =>
+          case Some(bad) =>
             checked += 1
-            // SortOrder.child.sql round-trips through the parser (Spark 4
-            // removed the Column(Expression) constructor); keys that
-            // reference pruned sub-plan attributes surface as per-entry
-            // ERROR lines and are audited by hand
-            val keys = s.order.zipWithIndex.map { case (o, i) =>
-              expr(o.child.sql).as(s"k$i")
-            }
-            val allCols = struct(df.columns.map(col).toIndexedSeq: _*)
-            val bad = df
-              .select(keys :+ allCols.as("row"): _*)
-              .groupBy(keys.indices.map(i => col(s"k$i")): _*)
-              .agg(countDistinct(col("row")).as("nd"))
-              .where(col("nd") > 1)
-              .count()
             if (bad > 0) {
               flagged += 1
               println(s"[sort-audit] UNDERDETERMINED ${e.key}: $bad tie groups " +

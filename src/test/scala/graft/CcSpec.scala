@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Equivalence spec for `dedup_cluster_cc` — the entry exempted from
-  * SelfCheckSpec's SQL-twin harness (Spark 4.1 cannot state the CC
-  * fixpoint in SQL: UNION-distinct recursion is unsupported and UNION ALL
+  * the conformance harness's SQL-twin check (Spark 4.1 cannot state the
+  * CC fixpoint in SQL: UNION-distinct recursion is unsupported and UNION ALL
   * closure diverges on cycles). Ground truth is a driver-side union-find
   * over the SAME edge predicate, computed in plain Scala — an
   * implementation with no shared code or algorithmic shape with the

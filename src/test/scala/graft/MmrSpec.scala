@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** Equivalence + invariant spec for the round-10 graph/vector additions.
   *
-  * `vec_mmr_diversify` is exempt from SelfCheckSpec's SQL-twin harness
-  * (the greedy needs LATERAL + list-state recursion Spark SQL cannot
+  * `vec_mmr_diversify` is exempt from the conformance harness's SQL-twin
+  * check (the greedy needs LATERAL + list-state recursion Spark SQL cannot
   * state), so this spec carries its in-repo equivalence evidence: an
   * independent plain-Scala replay of the WHOLE pipeline — cosines from
   * raw collected embeddings, the same ⌊·1e6+0.5⌋ quantization, the same

@@ -450,13 +450,13 @@ class PropertySpec extends SparkSpecBase {
 
   test("vec_ivf_pq MEAN recall over 10 queries vs brute force") {
     // mean over 10 query ids, not one: single-query recall@10 swings ±0.2
-    // on this near-orthogonal corpus (measured in RecallAB), so a one-query
-    // floor passes or fails on noise. Observed mean 0.44 (residual ≡ raw
+    // on this near-orthogonal corpus, so a one-query floor passes or fails
+    // on noise. Observed mean 0.44 (residual ≡ raw
     // here — labels are unclustered so cell centroids ≈ 0); floor 0.35
     // with the recall ceiling itself set by nprobe cell-miss.
     val qids = Seq(0L, 17L, 59L, 101L, 167L, 234L, 301L, 334L, 408L, 455L)
     val recalls = qids.map { q =>
-      val got = graft.queries.VectorQueries.ivfPqTopK(spark, sfDir, q, residual = true)
+      val got = graft.queries.VectorQueries.ivfPqTopK(spark, sfDir, q)
         .select("vec_id").collect().map(_.getLong(0)).toSet
       val brute = graft.queries.VectorQueries.bruteTopK(spark, sfDir, q)
         .select("vec_id").collect().map(_.getLong(0)).toSet
